@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
   * {{{
   * spark-submit --class graft.Main ocrdetectionspark.jar \
   *   extract --input <page-table-path> --output <dir> \
-  *   [--buckets 4096] [--salt 8] [--tasks N] [--resume] [--lang en] \
+  *   [--buckets 4096] [--tasks N] [--resume] [--lang en] \
   *   [--threshold 0.5] [--accuracy] [--images]
   * spark-submit --class graft.Main <jar> synth --n 100000 --output <dir>
   * spark-submit --class graft.Main <jar> summary --output <extract-dir>
@@ -42,7 +42,6 @@ object Main {
             accuracyMode = opts.contains("accuracy"),
             includeImages = opts.contains("images")),
           buckets = opts.getOrElse("buckets", "64").toInt,
-          saltFactor = opts.getOrElse("salt", "4").toInt,
           tasks = opts.getOrElse("tasks", "0").toInt,
           resume = opts.contains("resume"),
           langFilter = opts.get("lang"),
@@ -128,7 +127,7 @@ object Main {
 
   private def usage(): Unit = System.err.println(
     """usage: graft.Main <command> [options]
-      |  extract --input P --output P [--buckets N] [--salt N] [--tasks N]
+      |  extract --input P --output P [--buckets N] [--tasks N]
       |          [--resume] [--lang L] [--threshold T] [--accuracy] [--images]
       |          [--warc] (input is CC-style WARC files, not a parquet table)
       |          [--wet [DIR]] (also write WARC conversion records)

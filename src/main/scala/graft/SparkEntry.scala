@@ -1279,6 +1279,11 @@ object SparkEntry {
 
   private val U64 = "18446744073709551616" // 2^64
 
+  /** DuckDB list of the codepoints of string expression `s`, as HUGEINT.
+    * The walk matches `[\s\S]`, not `.`: DuckDB's `.` skips `\n`. */
+  private[graft] def codepoints(s: String): String =
+    s"list_transform(regexp_extract_all($s, '[\\s\\S]'), c -> unicode(c)::HUGEINT)"
+
   /** (x * c) mod 2^64 for u64 x (HUGEINT in [0,2^64)) and u64 constant c:
     * split x into 32-bit halves so no intermediate exceeds HUGEINT range. */
   private def u64MulMod(x: String, c: String): String =
@@ -1416,7 +1421,7 @@ object SparkEntry {
     * accumulator, then 8-byte, 4-byte and single-byte tails, then fmix.
     * Valid on this corpus because text is ASCII (UTF-8 bytes =
     * codepoints — the same premise the q24 simhash oracle states). */
-  private def xxh64StrCtes(src: String, carry: String, strCol: String,
+  private[graft] def xxh64StrCtes(src: String, carry: String, strCol: String,
       out: String): String = {
     def word8(j: String): String =
       s"list_reduce(list_reverse(bs[($j):($j)+7]), (a, b) -> a * 256 + b)"
@@ -1453,8 +1458,7 @@ object SparkEntry {
       s"t -> ((n // 4) * 4 + 1 + t)::HUGEINT)), " +
       s"(hh, o) -> ${u64MulMod(u64Rotl(s"xor(hh, ${u64MulMod("bs[o::INT]", XxP5)})", 11), XxP1)})"
     s"""${out}_b AS (SELECT $carry,
-       |    list_transform(regexp_extract_all($strCol, '.'),
-       |                   c -> unicode(c)::HUGEINT) AS bs,
+       |    ${codepoints(strCol)} AS bs,
        |    length($strCol)::HUGEINT AS n FROM $src),
        |${out}_s AS (SELECT $carry, bs, n,
        |    CASE WHEN n >= 32 THEN $stripes ELSE NULL END AS v FROM ${out}_b),
@@ -1511,8 +1515,7 @@ object SparkEntry {
        |  FROM documents),
        |t0 AS (SELECT doc_id,
        |  list_reduce(list_prepend($fnvOffset::HUGEINT,
-       |    list_transform(regexp_extract_all(tok, '.'),
-       |                   c -> unicode(c)::HUGEINT)),
+       |    ${codepoints("tok")}),
        |    (h, c) -> (xor(h, c) * 1099511628211) % $U64) AS h
        |  FROM tk),
        |${mixCtes("t", "t0", "doc_id")},
@@ -2311,8 +2314,7 @@ object SparkEntry {
       s"""WITH r0 AS (
         |  SELECT doc_id,
         |    list_reduce(list_prepend(0::HUGEINT,
-        |      list_transform(regexp_extract_all(text, '.'),
-        |                     c -> unicode(c)::HUGEINT)),
+        |      ${codepoints("text")}),
         |      (h, c) -> (h * 1315423911 + c) % $U64) AS h
         |  FROM documents),
         |${mixCtes("r", "r0", "doc_id")},
@@ -3276,8 +3278,7 @@ object SparkEntry {
           |      i -> words[i] || ' ' || words[i+1])) AS gram FROM wd),
           |g0 AS (SELECT doc_id, y,
           |    list_reduce(list_prepend($fnvOffset::HUGEINT,
-          |      list_transform(regexp_extract_all(gram, '.'),
-          |                     c -> unicode(c)::HUGEINT)),
+          |      ${codepoints("gram")}),
           |      (h, c) -> (xor(h, c) * 1099511628211) % $U64) AS h
           |  FROM gr),
           |${mixCtes("g", "g0", "doc_id, y")},
@@ -3319,8 +3320,7 @@ object SparkEntry {
           |pw AS (SELECT doc_id, y, i, words[i] AS w FROM px),
           |p0 AS (SELECT doc_id, y, i,
           |    list_reduce(list_prepend($fnvOffset::HUGEINT,
-          |      list_transform(regexp_extract_all(w, '.'),
-          |                     c -> unicode(c)::HUGEINT)),
+          |      ${codepoints("w")}),
           |      (h, c) -> (xor(h, c) * 1099511628211) % $U64) AS h
           |  FROM pw),
           |${mixCtes("p", "p0", "doc_id, y, i")},
@@ -3378,8 +3378,7 @@ object SparkEntry {
       m += "q72_bloom_dedup" ->
         s"""WITH f0 AS (SELECT doc_id,
           |    list_reduce(list_prepend($fnvOffset::HUGEINT,
-          |      list_transform(regexp_extract_all(text, '.'),
-          |                     c -> unicode(c)::HUGEINT)),
+          |      ${codepoints("text")}),
           |      (h, c) -> (xor(h, c) * 1099511628211) % $U64) AS h
           |  FROM documents),
           |${mixCtes("f", "f0", "doc_id")},
@@ -3583,8 +3582,7 @@ object SparkEntry {
           |  FROM wd),
           |g0 AS (SELECT doc_id, pos,
           |    list_reduce(list_prepend($fnvOffset::HUGEINT,
-          |      list_transform(regexp_extract_all(gram, '.'),
-          |                     c -> unicode(c)::HUGEINT)),
+          |      ${codepoints("gram")}),
           |      (h, c) -> (xor(h, c) * 1099511628211) % $U64) AS h
           |  FROM gr0),
           |${mixCtes("g", "g0", "doc_id, pos")},

@@ -32,8 +32,9 @@ import graft.kernel.MediaCodec.DecodedGray
   * identically, which ties the MQ path to the externally-cross-checked
   * G4 codec at the raster level.
   *
-  * Symbol-dictionary/text/halftone/refinement segment types are out of
-  * scope: a stream carrying them returns None and the caller keeps the
+  * Symbol-dictionary/text/halftone/refinement segment types, and
+  * intermediate generic regions (which only refinement composes), are out
+  * of scope: a stream carrying them returns None and the caller keeps the
   * header-only fallback (`MediaCodec.embeddedImageDims` still reads page
   * dims; such pages degrade to the image-only OCR path, which is also
   * the reference's behavior — it never decodes pixels for
@@ -488,7 +489,7 @@ object Jbig2 {
           defPixel = ((b(j + 16) & 0x04) != 0)
           page = Array.fill(pageH, pageW)(defPixel)
           pixelBudget = 4L * pageW * pageH
-        case 36 | 38 | 39 => // generic region (intermediate or immediate)
+        case 38 | 39 => // immediate generic region (lossy or lossless)
           if (page == null || dataLen < 18) return None
           val rw = rd32(b, j)
           val rh = rd32(b, j + 4)
@@ -549,7 +550,10 @@ object Jbig2 {
             y += 1
           }
         case 49 | 50 | 51 | 62 => // end of page / stripe / file, extension
-        case _ => return None // symbol/text/halftone/refinement: no pixels
+        // symbol/text/halftone/refinement carry no page pixels; an
+        // INTERMEDIATE generic region (36) is an auxiliary buffer that only
+        // a later refinement segment composes (T.88 §7.4.6), never the page
+        case _ => return None
       }
       i = j + dataLen
     }

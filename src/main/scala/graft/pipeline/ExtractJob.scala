@@ -16,14 +16,14 @@ final case class ExtractStats(
     bytesOut: Long)
 
 /** Job parameters. `buckets` is the output-table bucketing (pmod of url
-  * hash) — the unit of lineage/resume; `saltFactor` splits one hot bucket
-  * across up to that many tasks (explicit skew salting per the north rule —
-  * AQE skew handling doesn't apply because the hot path has no join).
-  * `tasks` = 0 lets the job size the shuffle at 2× default parallelism. */
+  * hash) — the unit of lineage/resume. `tasks` is the sink's writer count;
+  * 0 sizes it at 2× default parallelism. The salt that splits a bucket
+  * across writers is derived, ⌈tasks/buckets⌉, not configured (explicit
+  * skew salting per the north rule — AQE skew handling doesn't apply
+  * because the hot path has no join). */
 final case class JobConfig(
     probe: ProbeConfig = ProbeConfig(),
     buckets: Int = 64,
-    saltFactor: Int = 4,
     tasks: Int = 0,
     resume: Boolean = false,
     langFilter: Option[String] = None,
@@ -43,10 +43,11 @@ final case class KeyedPage(
   *
   * scan → Column-level pruning/filters (resume anti-join J1, lang filter —
   * kept BEFORE the typed boundary so Catalyst pushes them into the parquet
-  * scan) → one explicit repartition on (bucket, salt) → `mapPartitions`
-  * kernel (X1–X4, F1–F10, C1–C4, P1 per row; pages never leave their row,
-  * so A1/A2 are row-local — zero aggregation shuffle) → bucketed partitioned
-  * parquet write + per-bucket lineage rows (A11).
+  * scan) → `mapPartitions` kernel (X1–X4, F1–F10, C1–C4, P1 per row; pages
+  * never leave their row, so A1/A2 are row-local — zero aggregation
+  * shuffle) → one explicit repartition on (bucket, salt) → bucketed
+  * partitioned parquet write, one file per (bucket, salt) → per-bucket
+  * lineage rows (A11).
   *
   * Exactly ONE shuffle on the hot path: the explicit repartition. Lineage is
   * computed by re-reading cheap scalar columns of the freshly written output
@@ -128,14 +129,17 @@ object ExtractJob {
     val results = transform(spark, input, cfg, Some(acc), done)
 
     // -- the one explicit shuffle: bucket + salt, post-kernel (D3/D4) -------
-    // Aligns writer tasks with output buckets (bounded file counts) and
-    // splits a hot bucket across saltFactor writers; the shuffle payload is
-    // extracted output, never raw html.
+    // The writer count follows the cluster; the salt follows the writers:
+    // with more writers than buckets each bucket splits ⌈tasks/buckets⌉
+    // ways, otherwise not at all. Every (bucket, salt) key lands in exactly
+    // one task, so each key is one file and the sink commits at most
+    // buckets × salts files. The shuffle payload is extracted output,
+    // never raw html.
     val nTasks =
-      if (cfg.tasks > 0) cfg.tasks
-      else math.max(cfg.buckets, spark.sparkContext.defaultParallelism * 2)
+      if (cfg.tasks > 0) cfg.tasks else spark.sparkContext.defaultParallelism * 2
+    val salts = math.max(1, (nTasks + cfg.buckets - 1) / cfg.buckets)
     val placed = results.repartition(nTasks, $"bucket",
-      pmod(xxhash64($"url", lit(7)), lit(cfg.saltFactor)))
+      pmod(xxhash64($"url", lit(7)), lit(salts)))
 
     // -- sink: partitioned (bucketed-by-url-hash) parquet -------------------
     // Resume writes with DYNAMIC partition overwrite, not append: if a
@@ -223,10 +227,6 @@ object ExtractJob {
         rows.map(_.bytes_in).sum, rows.map(_.bytes_out).sum)
     } finally lineage.unpersist()
   }
-
-  /** Public alias for the streaming module (same row mapping). */
-  def toDocResultPublic(kp: KeyedPage, ex: DocExtract, bytesIn: Long): DocResult =
-    toDocResult(kp, ex, bytesIn)
 
   private[pipeline] def toDocResult(kp: KeyedPage, ex: DocExtract, bytesIn: Long): DocResult = {
     val stats = ex.pageResults.map { r =>

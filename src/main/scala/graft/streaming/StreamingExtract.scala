@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.kernel.Extractor
 import graft.model.DocResult
-import graft.pipeline.{ExtractJob, JobConfig, KeyedPage}
+import graft.pipeline.{ExtractJob, JobConfig}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -28,23 +27,10 @@ object StreamingExtract {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
-  /** Streaming variant of ExtractJob.transform: same prologue + kernel. */
-  def transform(spark: SparkSession, pages: DataFrame, cfg: JobConfig): Dataset[DocResult] = {
-    import spark.implicits._
-    var in = pages.select($"url", $"warc_ts", $"html", $"lang")
-      .filter($"url".isNotNull)
-    cfg.langFilter.foreach(l => in = in.filter($"lang" === l))
-    val keyed = in.withColumn(
-      "bucket", pmod(xxhash64($"url"), lit(cfg.buckets)).cast("int"))
-    val probeCfg = cfg.probe
-    keyed.as[KeyedPage].mapPartitions { it =>
-      val extractor = new Extractor(probeCfg)
-      it.map { kp =>
-        val bytesIn = if (kp.html == null) 0L else kp.html.length.toLong
-        ExtractJob.toDocResultPublic(kp, extractor.extract(kp.html), bytesIn)
-      }
-    }
-  }
+  /** Streaming extraction is `ExtractJob.transform` itself: the same
+    * prologue and kernel, with no resume pruning and no accumulators. */
+  def transform(spark: SparkSession, pages: DataFrame, cfg: JobConfig): Dataset[DocResult] =
+    ExtractJob.transform(spark, pages, cfg)
 
   /** Start the continuous extraction query: new parquet files appearing
     * under `inputDir` are extracted exactly once (file-source checkpoint)

@@ -3,6 +3,7 @@ package graft.tools
 import scala.collection.mutable
 
 import graft.SparkEntry
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
@@ -63,11 +64,12 @@ object JobProfile {
     SparkEntry.queries("q35_lineitem_pricing")(spark, sfDir).count() // warmup
 
     for (r <- 1 to reps) {
-      jobStart.clear(); jobWall.clear(); jobStages.clear(); jobTaskSecs.clear()
+      Seq(jobStart, jobWall, jobStages, jobTaskSecs, jobTasks, jobSite, stageToJob)
+        .foreach(_.clear())
       val t0 = System.nanoTime()
       val cnt = SparkEntry.queries(name)(spark, sfDir).count()
       val secs = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the listener bus drain
+      ListenerBusDrain(spark.sparkContext)
       println(f"[jobprofile] rep=$r $name $secs%.3f s rows=$cnt")
       jobWall.foreach { case (j, w) =>
         println(f"[jobprofile]   job=$j%-4d wall=$w%7.3f s stages=${jobStages.getOrElse(j, 0)}%-3d tasks=${jobTasks.getOrElse(j, 0)}%-4d taskSecs=${jobTaskSecs.getOrElse(j, 0.0)}%8.3f  ${jobSite.getOrElse(j, "?")}")

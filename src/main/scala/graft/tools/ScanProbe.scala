@@ -64,16 +64,13 @@ object ScanProbe {
     println(preChk.queryExecution.executedPlan.toString.split("\n")
       .map(l => "[scanprobe] " + l.take(150)).mkString("\n"))
 
-    time("construct minhashCandidatePairs") {
-      val cand = graft.ops.Dedup.minhashCandidatePairs(spreadDocs,
-        "doc_id", "text", 3, 32, 8)
-      time("candidates+count")(cand.count())
-    }
-    time("construct minhashNearDups") {
-      val pairs = graft.ops.Dedup.minhashNearDups(spreadDocs,
-        "doc_id", "text", 3, 32, 8, 0.5)
-      time("nearDups+count")(pairs.count())
-    }
+    // operators are built outside the timer: only their counts are timed
+    val cand = graft.ops.Dedup.minhashCandidatePairs(spreadDocs,
+      "doc_id", "text", 3, 32, 8)
+    time("candidates+count")(cand.count())
+    val pairs = graft.ops.Dedup.minhashNearDups(spreadDocs,
+      "doc_id", "text", 3, 32, 8, 0.5)
+    time("nearDups+count")(pairs.count())
     spark.stop()
   }
 }

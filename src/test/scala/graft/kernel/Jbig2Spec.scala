@@ -136,6 +136,23 @@ class Jbig2Spec extends AnyFunSuite {
     assert(Jbig2.decode(symDict).isEmpty)
   }
 
+  test("an INTERMEDIATE generic region (type 36) is out of profile: it " +
+    "is a refinement buffer, never composited onto the page (T.88 §7.4.6)") {
+    val good = Jbig2.encode(48, 30, PdfParse.ccittInk, tpgdon = true)
+    val regionFlags = 4 + 11 + 19 // second segment header's flags byte
+    assert(good(regionFlags) == 39)
+    val intermediate = good.clone()
+    intermediate(regionFlags) = 36
+    assert(Jbig2.decode(intermediate).isEmpty)
+    // the lossy immediate type still composites like the lossless one
+    val lossy = good.clone()
+    lossy(regionFlags) = 38
+    assert(Jbig2.decode(lossy).map(px) == Jbig2.decode(good).map(px))
+    // header dims stay readable, so the page keeps its header fallback
+    assert(MediaCodec.embeddedImageDims(intermediate)
+      .contains((48, 30, "jbig2")))
+  }
+
   test("crafted-stream work bounds: a segment-count bomb and a " +
     "region-area bomb both return None (never a partial page, never " +
     "unbounded decode work)") {

@@ -149,7 +149,7 @@ class PipelineSpec extends AnyFunSuite {
     val input = SynthSource.pages(spark, N, seed = 11L).toDF()
     val out1 = tmp(); val out8 = tmp()
     ExtractJob.run(spark, input, out1, JobConfig(buckets = 4, tasks = 1))
-    ExtractJob.run(spark, input, out8, JobConfig(buckets = 4, tasks = 8, saltFactor = 8))
+    ExtractJob.run(spark, input, out8, JobConfig(buckets = 4, tasks = 8))
 
     val a = ExtractJob.readDocs(spark, out1)
       .select("url", "status", "extracted_text", "total_pages")
@@ -157,6 +157,46 @@ class PipelineSpec extends AnyFunSuite {
       .select("url", "status", "extracted_text", "total_pages")
     assert(a.exceptAll(b).count() == 0)
     assert(b.exceptAll(a).count() == 0)
+  }
+
+  /** Part-file count per `bucket=*` directory of a run's docs table. */
+  private def filesPerBucket(out: String): Map[String, Int] =
+    new java.io.File(s"$out/docs").listFiles().filter(_.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
+      .toMap
+
+  private def assertLineageMatchesDocs(out: String): Unit = {
+    val d = ExtractJob.readDocs(spark, out).agg(count(lit(1)), sum("total_pages"),
+      sum("ocr_page_count"), sum(when(length(col("extracted_text")) === 0, 1L)
+        .otherwise(0L)), sum("bytes_in"), sum("bytes_out")).head()
+    val l = ExtractJob.readLineage(spark, out).agg(sum("docs"), sum("pages"),
+      sum("ocr_needed"), sum("empty_extractions"), sum("bytes_in"),
+      sum("bytes_out")).head()
+    for (i <- 0 until 6)
+      assert(d.getAs[Number](i).longValue == l.getAs[Number](i).longValue, s"column $i")
+  }
+
+  test("sink layout: with more buckets than writers each bucket is ONE " +
+    "parquet file") {
+    val out = tmp()
+    ExtractJob.run(spark, SynthSource.pages(spark, N, seed = 13L).toDF(), out,
+      JobConfig(buckets = 16))
+    val files = filesPerBucket(out)
+    assert(files.size == 16)
+    assert(files.values.forall(_ == 1), files)
+    assertLineageMatchesDocs(out)
+  }
+
+  test("sink layout: with more writers than buckets the derived salt " +
+    "splits each bucket over at most ⌈tasks/buckets⌉ files") {
+    val out = tmp()
+    ExtractJob.run(spark, SynthSource.pages(spark, N, seed = 13L).toDF(), out,
+      JobConfig(buckets = 2, tasks = 8))
+    val files = filesPerBucket(out)
+    assert(files.size == 2)
+    assert(files.values.exists(_ > 1), files)
+    assert(files.values.forall(_ <= 4), files)
+    assertLineageMatchesDocs(out)
   }
 
   test("J1 checkpoint resume: only missing buckets recompute") {
