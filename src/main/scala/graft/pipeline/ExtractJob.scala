@@ -4,9 +4,8 @@ import graft.kernel.{DocExtract, Extractor, ProbeConfig}
 import graft.model.{DocResult, LineageRow, Page, PageStat}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
-/** Counters harvested from accumulators after a run (A11 / north rule). */
+/** Counters summed from the lineage rows a run commits (A11 / north rule). */
 final case class ExtractStats(
     docs: Long,
     pages: Long,
@@ -56,19 +55,6 @@ final case class KeyedPage(
   */
 object ExtractJob {
 
-  /** A11 counter accumulators. */
-  final case class Accums(
-      docs: LongAccumulator, pages: LongAccumulator, ocr: LongAccumulator,
-      empty: LongAccumulator, bytesIn: LongAccumulator, bytesOut: LongAccumulator)
-
-  def newAccums(spark: SparkSession): Accums = Accums(
-    spark.sparkContext.longAccumulator("graft.docs"),
-    spark.sparkContext.longAccumulator("graft.pages"),
-    spark.sparkContext.longAccumulator("graft.ocr_needed"),
-    spark.sparkContext.longAccumulator("graft.empty_extractions"),
-    spark.sparkContext.longAccumulator("graft.bytes_in"),
-    spark.sparkContext.longAccumulator("graft.bytes_out"))
-
   /** The sink-free pipeline: relational prologue → kernel, NARROW end to
     * end — extraction is per-row, so no byte of raw `html` ever crosses a
     * shuffle. Task sizing comes from the scan split
@@ -82,7 +68,6 @@ object ExtractJob {
       spark: SparkSession,
       input: DataFrame,
       cfg: JobConfig,
-      accums: Option[Accums] = None,
       doneBucketList: Seq[Int] = Seq.empty): Dataset[DocResult] = {
     import spark.implicits._
 
@@ -107,26 +92,15 @@ object ExtractJob {
       val extractor = new Extractor(probeCfg)
       it.map { kp =>
         val bytesIn = if (kp.html == null) 0L else kp.html.length.toLong
-        val ex = extractor.extract(kp.html)
-        val row = toDocResult(kp, ex, bytesIn)
-        accums.foreach { a =>
-          a.docs.add(1)
-          a.pages.add(row.total_pages)
-          a.ocr.add(row.ocr_page_count)
-          if (row.extracted_text.isEmpty) a.empty.add(1)
-          a.bytesIn.add(bytesIn)
-          a.bytesOut.add(row.bytes_out)
-        }
-        row
+        toDocResult(kp, extractor.extract(kp.html), bytesIn)
       }
     }
   }
 
   def run(spark: SparkSession, input: DataFrame, outDir: String, cfg: JobConfig): ExtractStats = {
     import spark.implicits._
-    val acc = newAccums(spark)
     val done = if (cfg.resume) doneBuckets(spark, outDir) else Seq.empty
-    val results = transform(spark, input, cfg, Some(acc), done)
+    val results = transform(spark, input, cfg, done)
 
     // -- the one explicit shuffle: bucket + salt, post-kernel (D3/D4) -------
     // The writer count follows the cluster; the salt follows the writers:
@@ -155,10 +129,8 @@ object ExtractJob {
 
     // -- lineage AFTER data commit (resume-safety ordering) -----------------
     // Returned stats are aggregated from the lineage rows this invocation
-    // writes (exactly-once: derived from durable committed output), NOT
-    // from the accumulators — accumulators increment inside a
-    // transformation, so retried/speculative tasks over-count them; they
-    // remain attached for live progress telemetry only.
+    // writes (exactly-once: derived from durable committed output, so
+    // retried or speculative tasks cannot over-count them).
     val mode = if (cfg.resume) "append" else "overwrite"
     writeLineage(spark, outDir, cfg, mode)
   }

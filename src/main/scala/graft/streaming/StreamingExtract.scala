@@ -27,11 +27,6 @@ object StreamingExtract {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
-  /** Streaming extraction is `ExtractJob.transform` itself: the same
-    * prologue and kernel, with no resume pruning and no accumulators. */
-  def transform(spark: SparkSession, pages: DataFrame, cfg: JobConfig): Dataset[DocResult] =
-    ExtractJob.transform(spark, pages, cfg)
-
   /** Start the continuous extraction query: new parquet files appearing
     * under `inputDir` are extracted exactly once (file-source checkpoint)
     * into bucket-partitioned parquet under `outDir`. */
@@ -39,7 +34,7 @@ object StreamingExtract {
       checkpoint: String, cfg: JobConfig = JobConfig(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val pages = spark.readStream.schema(pageSchema).parquet(inputDir)
-    transform(spark, pages, cfg)
+    ExtractJob.transform(spark, pages, cfg)
       .writeStream
       .format("parquet")
       .option("path", s"$outDir/docs")

@@ -56,28 +56,6 @@ object KernelProfile {
       docs.map(d => PdfParse.writePdf(d.pages.map(_.textLayer.split("\n").toSeq),
         cidFont = true, cidEncoding = "90ms-RKSJ-H")))
 
-    // CID docs must flow the TEXT path, not degrade to needs-OCR: the
-    // Identity-H text layer decodes byte-identically to the classic layout
-    def cidCorpusCheck(tag: String, marker: String): Unit = {
-      val share = rows.collect { case (7, b) if b != null &&
-        PdfParse.isRealPdf(b) &&
-        new String(b, java.nio.charset.StandardCharsets.ISO_8859_1)
-          .contains(marker) => b }
-      val textOk = share.count { b =>
-        val r = ex.extract(b)
-        r.docKind == "pdf" && r.status != "true" && r.extractedText.length > 500
-      }
-      println(s"[kprof] ${tag}_corpus_docs=${share.length} text_path_ok=$textOk")
-    }
-    cidCorpusCheck("cid_identityH", "/Identity-H")
-    // predefined UCS2-family CMap docs must ALSO flow the text path
-    // (exact UCS-2 decode), not degrade to needs-OCR
-    cidCorpusCheck("cid_ucs2_cmap", "/UniJIS-UCS2-H")
-    // byte-oriented LEGACY CMap docs (round 6): the JDK-charset decode
-    // moves these off the image-only/OCR path onto the text path too
-    cidCorpusCheck("cid_legacy_rksj", "/90ms-RKSJ-H")
-    cidCorpusCheck("cid_legacy_gbk", "/GBK-EUC-H")
-
     // JBIG2 scanned layout (round 6): full-page MQ generic region
     // encode at writePdf time, parse + pixel-probe decode measured here
     time("pdf1p_scan_jbig2_1200x1600", Array.tabulate(40)(_ =>

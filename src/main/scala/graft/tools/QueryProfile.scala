@@ -1,35 +1,61 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
+
 import scala.collection.mutable
 
 import graft.SparkEntry
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Per-job breakdown of one SparkEntry query: wall clock, stage count and
-  * summed executor task time per job, in submission order — shows where a
-  * multi-job query (checkpoint materializations, iterative rounds,
-  * convergence checks) actually spends its time. Usage:
+/** Query profiler for SparkEntry queries. Times each named query `reps`
+  * times, round-robin (so a host-capacity drift hits every query equally
+  * rather than whichever ran last — the BENCH.md §0 discipline), through
+  * `.count()` after a q35 warm-up, as `graft.Bench` does. After every
+  * query it prints one line per Spark job in submission order: wall clock,
+  * stages, tasks, summed executor task time and the graft call sites of
+  * each stage — where a multi-job query (checkpoint materializations,
+  * iterative rounds, convergence checks) spends its time. With `planDir`,
+  * each query's formatted physical plan is first written to
+  * `<planDir>/<query>.txt`. Usage:
   *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch \
-  *     "runMain graft.tools.JobProfile q80_leakage_split [reps]"
+  *   SPARK_GRAFT_SF_DIR=<sf-dir> sbt -batch \
+  *     "runMain graft.tools.QueryProfile q45_dedup_components,q80_leakage_split [reps] [planDir]"
+  *
+  * SPARK_GRAFT_CPUS sets local[N] (default: available processors).
   */
-object JobProfile {
+object QueryProfile {
   def main(args: Array[String]): Unit = {
-    val name = if (args.nonEmpty) args(0) else "q80_leakage_split"
-    val reps = if (args.length > 1) args(1).toInt else 2
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    require(args.nonEmpty, "usage: QueryProfile <q1,q2,...> [reps] [planDir]")
+    val names = args(0).split(",").toSeq
+    val reps = if (args.length > 1) args(1).toInt else 3
+    val planDir = args.lift(2)
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to a testdata scale-factor directory"))
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName("graft-job-profile")
+      .appName("graft-query-profile")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+
+    planDir.foreach { d =>
+      val dir = Paths.get(d)
+      Files.createDirectories(dir)
+      names.foreach { n =>
+        val plan = SparkEntry.queries(n)(spark, sfDir)
+          .queryExecution.explainString(FormattedMode)
+        Files.write(dir.resolve(s"$n.txt"), plan.getBytes("UTF-8"))
+        println(s"[qprofile] wrote ${dir.resolve(s"$n.txt")} (${plan.length} chars)")
+      }
+    }
 
     val jobStart = mutable.Map[Int, Long]()
     val jobWall = mutable.LinkedHashMap[Int, Double]()
@@ -54,7 +80,7 @@ object JobProfile {
           e.stageInfo.taskMetrics.executorRunTime / 1e3
         jobTasks(j) = jobTasks.getOrElse(j, 0) + e.stageInfo.numTasks
         val graftFrames = e.stageInfo.details.split("\n")
-          .filter(l => l.contains("graft.") && !l.contains("JobProfile"))
+          .filter(l => l.contains("graft.") && !l.contains("QueryProfile"))
           .take(2).map(_.trim.replaceAll("^at ", "")).mkString(" <- ")
         jobSite(j) = jobSite.getOrElse(j, "") + " | " +
           f"[${e.stageInfo.numTasks}t ${e.stageInfo.taskMetrics.executorRunTime / 1e3}%.2fs ${graftFrames.take(120)}]"
@@ -63,16 +89,17 @@ object JobProfile {
 
     SparkEntry.queries("q35_lineitem_pricing")(spark, sfDir).count() // warmup
 
-    for (r <- 1 to reps) {
+    for (r <- 1 to reps; n <- names) {
+      ListenerBusDrain(spark.sparkContext)
       Seq(jobStart, jobWall, jobStages, jobTaskSecs, jobTasks, jobSite, stageToJob)
         .foreach(_.clear())
       val t0 = System.nanoTime()
-      val cnt = SparkEntry.queries(name)(spark, sfDir).count()
+      val cnt = SparkEntry.queries(n)(spark, sfDir).count()
       val secs = (System.nanoTime() - t0) / 1e9
       ListenerBusDrain(spark.sparkContext)
-      println(f"[jobprofile] rep=$r $name $secs%.3f s rows=$cnt")
+      println(f"[qprofile] rep=$r $n%-28s $secs%8.3f s rows=$cnt")
       jobWall.foreach { case (j, w) =>
-        println(f"[jobprofile]   job=$j%-4d wall=$w%7.3f s stages=${jobStages.getOrElse(j, 0)}%-3d tasks=${jobTasks.getOrElse(j, 0)}%-4d taskSecs=${jobTaskSecs.getOrElse(j, 0.0)}%8.3f  ${jobSite.getOrElse(j, "?")}")
+        println(f"[qprofile]   job=$j%-4d wall=$w%7.3f s stages=${jobStages.getOrElse(j, 0)}%-3d tasks=${jobTasks.getOrElse(j, 0)}%-4d taskSecs=${jobTaskSecs.getOrElse(j, 0.0)}%8.3f  ${jobSite.getOrElse(j, "?")}")
       }
     }
     spark.stop()

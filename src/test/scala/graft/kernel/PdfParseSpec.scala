@@ -1018,4 +1018,23 @@ class PdfParseSpec extends AnyFunSuite {
         s"$mode: S6 must reuse the embedded JPEG, not re-render")
     }
   }
+
+  test("synthetic corpus CID PDFs take the text path under every CMap") {
+    // kind-7 rows (idx ≡ 7 mod 10) carry the real-PDF layouts; the CID ones
+    // must decode to text, not degrade to needs-OCR
+    val ex = new Extractor(ProbeConfig())
+    val pdfs = (7L until 6000L by 10L).map(i => Synth.row(42L, i).html)
+      .filter(b => b != null && PdfParse.isRealPdf(b))
+      .map(b => (b, new String(b, StandardCharsets.ISO_8859_1)))
+    for (marker <- Seq("/Identity-H", "/UniJIS-UCS2-H", "/UniGB-UTF16-H",
+        "/90ms-RKSJ-H", "/GBK-EUC-H")) {
+      val docs = pdfs.collect { case (b, s) if s.contains(marker) => b }
+      assert(docs.nonEmpty, s"no corpus doc carries $marker")
+      docs.foreach { b =>
+        val r = ex.extract(b)
+        assert(r.docKind == "pdf" && r.status != "true" && r.extractedText.length > 500,
+          s"$marker: kind=${r.docKind} status=${r.status} text=${r.extractedText.length}")
+      }
+    }
+  }
 }

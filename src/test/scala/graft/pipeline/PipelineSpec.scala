@@ -529,4 +529,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(!kcur(2L).contains("tpl0") && kcur(2L).contains("g1822"),
       kcur(2L).takeRight(80))
   }
+
+  test("flagship entry: SparkEntry.entry returns rows with its six fields") {
+    val df = graft.SparkEntry.entry(spark)
+    assert(df.schema.fieldNames.toSeq ==
+      Seq("url", "doc_kind", "status", "total_pages", "ocr_page_count", "text_len"))
+    assert(df.count() > 0)
+  }
 }

@@ -106,7 +106,7 @@ class StreamingSpec extends AnyFunSuite {
     def runOnce(): Unit = {
       val pages = spark.readStream
         .schema(StreamingExtract.pageSchema).parquet(inputDir)
-      val docs = StreamingExtract.transform(spark, pages, JobConfig(buckets = 4))
+      val docs = ExtractJob.transform(spark, pages, JobConfig(buckets = 4))
       val q = StreamingExtract.curateVerdicts(docs)
         .writeStream.format("parquet")
         .option("path", s"$outDir/verdicts")
@@ -153,7 +153,7 @@ class StreamingSpec extends AnyFunSuite {
     def runOnce(): Unit = {
       val pages = spark.readStream
         .schema(StreamingExtract.pageSchema).parquet(inputDir)
-      val docs = StreamingExtract.transform(spark, pages, JobConfig(buckets = 4))
+      val docs = ExtractJob.transform(spark, pages, JobConfig(buckets = 4))
       val q = StreamingExtract.nearDupVerdicts(docs)
         .writeStream.format("parquet")
         .option("path", s"$outDir/neardup")
@@ -226,7 +226,7 @@ class StreamingSpec extends AnyFunSuite {
       def runOnce(): Unit = {
         val pages = spark.readStream
           .schema(StreamingExtract.pageSchema).parquet(inputDir)
-        val docs = StreamingExtract.transform(spark, pages, JobConfig(buckets = 4))
+        val docs = ExtractJob.transform(spark, pages, JobConfig(buckets = 4))
         val q = StreamingExtract.nearDupVerdicts(docs)
           .writeStream.format("parquet")
           .option("path", s"$outDir/neardup")
