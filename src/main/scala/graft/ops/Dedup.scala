@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.expr.KernelExpressions
 import graft.kernel.Hashing
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -239,42 +240,29 @@ object Dedup {
       .select(col("id"), col("component"), col("score"), col("keeper"))
   }
 
-  /** k-word shingles of a token array (empty when fewer than k tokens). */
-  def wordShingles(tokens: Column, k: Int): Column =
-    when(size(tokens) < k, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(tokens) - k),
-        i => array_join(slice(tokens, i + 1, lit(k)), " ")))
+  /** Sorted distinct 64-bit shingle fingerprints of a text column: the
+    * xxhash64 of every k-word shingle of `split(text, " ", -1)`, from ONE
+    * byte scan per document ([[graft.expr.ShingleHashesExpr]]); the sort
+    * and distinct are codegen'd built-ins. All downstream dedup math
+    * (minhash, prefix filtering, Jaccard verify) runs on the fixed-width
+    * longs — set ops and sorts on longs instead of repeated string
+    * comparisons. A 64-bit collision merging two distinct shingles happens
+    * with probability ~|sh|²/2^64 per doc (negligible; the DuckDB oracles
+    * verify value-identity to string-set Jaccard on the test corpus). Empty
+    * when the text has fewer than k tokens; null for null text. */
+  def shingleFingerprints(text: Column, k: Int): Column =
+    sort_array(array_distinct(KernelExpressions.shingleHashes(text, k)))
 
-  /** Sorted distinct 64-bit shingle fingerprints: k-word shingles hashed to
-    * longs in ONE string-hash pass. All downstream dedup math (minhash,
-    * prefix filtering, Jaccard verify) runs on the fixed-width longs —
-    * set ops and sorts on longs instead of repeated string comparisons. A
-    * 64-bit collision merging two distinct shingles happens with
-    * probability ~|sh|²/2^64 per doc (negligible; the DuckDB oracles
-    * verify value-identity to string-set Jaccard on the test corpus). */
-  def shingleFingerprints(tokens: Column, k: Int): Column =
-    sort_array(array_distinct(transform(wordShingles(tokens, k),
-      x => xxhash64(x))))
-
-  /** MinHash signature over 64-bit shingle fingerprints: sig[s] =
-    * min over x of xxhash64(x, s) — per-seed hashing of the fixed-width
-    * fingerprint (cheap long input) instead of re-hashing shingle strings.
-    *
-    * Formulated as a single-pass `aggregate` rather than
-    * transform(seeds, s -> array_min(transform(shingles, ...))): the outer
-    * lambda of that shape references the shingles expression once
-    * *statically* but evaluates it once per seed at *runtime*, so when
-    * column pruning inlines the upstream shingle construction the whole
-    * tokenize+shingle pipeline re-runs numHashes times per row (measured
-    * 32× difference at sf0.1). Inside the aggregate the lambda variable is
-    * an already-evaluated value — no re-evaluation per seed. */
-  def minhashSignature(shingleHashes: Column, numHashes: Int): Column =
-    aggregate(
-      shingleHashes,
-      array_repeat(lit(Long.MaxValue), numHashes),
-      (acc, x) => zip_with(acc, sequence(lit(0L), lit(numHashes - 1L)),
-        (m, s) => least(m, xxhash64(x, s))))
+  /** Hashes per LSH band. Every band must be non-empty and the signature
+    * must split evenly: an empty band slice hashes every doc to the same
+    * bucket (the candidate join goes all-pairs), and a remainder would
+    * silently drop the tail hashes. */
+  private[graft] def bandSize(numHashes: Int, numBands: Int): Int = {
+    require(numBands >= 1 && numHashes >= numBands && numHashes % numBands == 0,
+      s"numHashes must be a positive multiple of numBands, got " +
+        s"numHashes = $numHashes, numBands = $numBands")
+    numHashes / numBands
+  }
 
   /** LSH band keys: the signature is cut into `numBands` bands of
     * `bandSize`; each band's slice hashes structurally to one bucket key.
@@ -317,7 +305,7 @@ object Dedup {
   private[graft] def shingleTable(df: DataFrame, idCol: String,
       textCol: String, shingleK: Int): DataFrame =
     df.select(col(idCol).as("id"),
-        shingleFingerprints(split(col(textCol), " "), shingleK).as("shingles"))
+        shingleFingerprints(col(textCol), shingleK).as("shingles"))
       .localCheckpoint(eager = false)
       .filter(size(col("shingles")) > 0)
 
@@ -328,10 +316,10 @@ object Dedup {
     * of three fixed-width columns. */
   private def bandTable(shingled: DataFrame, numHashes: Int,
       numBands: Int): DataFrame = {
-    val bandSize = numHashes / numBands
     shingled
-      .withColumn("sig", minhashSignature(col("shingles"), numHashes))
-      .withColumn("bk", explode(bandKeys(col("sig"), numBands, bandSize)))
+      .withColumn("sig", KernelExpressions.minhash(col("shingles"), numHashes))
+      .withColumn("bk", explode(bandKeys(col("sig"), numBands,
+        bandSize(numHashes, numBands))))
       .select(col("id"), col("bk.band"), col("bk.bucket"))
       .localCheckpoint(eager = false)
   }
@@ -384,8 +372,8 @@ object Dedup {
   /** MinHash+LSH near-duplicate candidate pairs with exact Jaccard
     * verification.
     *
-    * Plan shape (scale-critical): tokenize → shingle → minhash (all
-    * row-local HOFs, no shuffle) → explode band keys → self-join on
+    * Plan shape (scale-critical): shingle hashes → minhash (row-local
+    * native expressions, no shuffle) → explode band keys → self-join on
     * (band, bucket) [THE shuffle — LSH buckets are the join key, so cost is
     * O(candidates), not O(n²)]. The band join carries ONLY (id, band,
     * bucket) — shingle arrays never ride that shuffle — and candidate
@@ -535,7 +523,6 @@ object Dedup {
       groupCols: Seq[String],
       shingleK: Int = 3,
       threshold: Double = 0.3): DataFrame = {
-    val toks = split(col(textCol), " ")
     // sorted distinct shingle fingerprints: the sort IS the global total
     // order the prefix principle needs (any total order is valid; longs
     // sort far cheaper than shingle strings)
@@ -543,7 +530,7 @@ object Dedup {
     // sides) AND the verify join (both sides); see shingleTable
     val base = df.select(
       (groupCols.map(col) :+ col(idCol).as("id") :+
-        shingleFingerprints(toks, shingleK).as("sh")): _*)
+        shingleFingerprints(col(textCol), shingleK).as("sh")): _*)
       // filter AFTER the checkpoint boundary — see shingleTable: pushdown
       // would inline the shingle expression serially into the scan stage
       .localCheckpoint(eager = false)
@@ -612,14 +599,14 @@ object Dedup {
     // generation AND the verify join (see shingleTable; at a 100 TB base
     // the same pattern persists the base sketch to a stored table)
     def shingled(df: DataFrame) = df.select(col("doc_id"),
-      shingleFingerprints(split(col("text"), " "), shingleK).as("sh"))
+      shingleFingerprints(col("text"), shingleK).as("sh"))
       // filter AFTER the checkpoint boundary — see shingleTable
       .localCheckpoint(eager = false)
       .filter(size(col("sh")) > 0)
+    val bands = bandSize(numHashes, numBands)
     def banded(df: DataFrame) = df
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .withColumn("bk", explode(bandKeys(col("sig"), numBands,
-        numHashes / numBands)))
+      .withColumn("sig", KernelExpressions.minhash(col("sh"), numHashes))
+      .withColumn("bk", explode(bandKeys(col("sig"), numBands, bands)))
       .select(col("doc_id"), col("bk.band"), col("bk.bucket"))
     val shInc = shingled(inc)
     val shBase = shingled(bs)
@@ -665,8 +652,8 @@ object Dedup {
       k: Int = 8): DataFrame = {
     val grams = df.select(
       col(idCol).cast("long").as("doc_id"),
-      explode(shingleFingerprints(
-        split(coalesce(col(textCol), lit("")), " "), k)).as("gram"))
+      explode(shingleFingerprints(coalesce(col(textCol), lit("")), k))
+        .as("gram"))
     val freq = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("n_docs")) // grams are distinct per doc
     grams.join(freq, Seq("gram"))
@@ -694,8 +681,8 @@ object Dedup {
       idCol: String, textCol: String, k: Int = 5): DataFrame = {
     def grams(d: DataFrame) = d.select(
       col(idCol).cast("long").as("doc_id"),
-      explode(shingleFingerprints(
-        split(coalesce(col(textCol), lit("")), " "), k)).as("gram"))
+      explode(shingleFingerprints(coalesce(col(textCol), lit("")), k))
+        .as("gram"))
     val benchGrams = grams(bench).select(col("gram")).distinct()
       .withColumn("is_bench", lit(true))
     grams(corpus)
@@ -813,11 +800,11 @@ object Dedup {
     * (doc_id, text). */
   private[graft] def duplicatedSpanSegments(base: DataFrame, k: Int,
       minTokens: Int, minCount: Long, keepFirst: Boolean): DataFrame = {
-    val toks = split(col("text"), " ")
     // (doc_id, pos, gram-fp), NOT per-doc distinct: occurrence counts
     val grams = base
-      .select(col("doc_id"), posexplode(wordShingles(toks, k)))
-      .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("gram"))
+      .select(col("doc_id"),
+        posexplode(KernelExpressions.shingleHashes(col("text"), k)))
+      .select(col("doc_id"), col("pos"), col("col").as("gram"))
     // duplicated-gram start positions → covered token indices (distinct:
     // overlapping grams cover shared tokens once — required by islands);
     // keepFirst exempts each gram's canonical (min (doc_id, pos))

@@ -211,12 +211,12 @@ object StreamingExtract {
       stateTtl: String = ""): Dataset[StreamNearDup] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val bandSize = numHashes / numBands
-    val toks = split(coalesce($"extracted_text", lit("")), " ")
+    val bandSize = graft.ops.Dedup.bandSize(numHashes, numBands)
     val sigs = docs.toDF()
-      .select($"url", graft.ops.Dedup.shingleFingerprints(toks, shingleK).as("sh"))
+      .select($"url", graft.ops.Dedup.shingleFingerprints(
+        coalesce($"extracted_text", lit("")), shingleK).as("sh"))
       .filter(size($"sh") > 0)
-      .withColumn("sig", graft.ops.Dedup.minhashSignature($"sh", numHashes))
+      .withColumn("sig", graft.expr.KernelExpressions.minhash($"sh", numHashes))
       .withColumn("bk",
         explode(graft.ops.Dedup.bandKeys($"sig", numBands, bandSize)))
       .select($"url", $"bk.band".cast("int").as("band"),

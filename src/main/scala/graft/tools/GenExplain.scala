@@ -3,12 +3,35 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.pipeline.{ExtractJob, JobConfig, SynthSource}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Writes EXPLAIN.md: the formatted physical plans of the hot paths, as a
   * reviewable artifact (`sbt "runMain graft.tools.GenExplain"`). */
 object GenExplain {
+
+  /** Formatted plans of everything `build` runs: one (action, plan) per
+    * action taken while building — chiefly each lazy `localCheckpoint`,
+    * whose upstream the final plan shows only as `Scan ExistingRDD` —
+    * then ("final", the returned frame's plan). */
+  def builtPlans(spark: SparkSession)(build: => DataFrame): Seq[(String, String)] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(action -> qe.explainString(FormattedMode))
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val last = build.queryExecution.explainString(FormattedMode)
+      ListenerBusDrain(spark.sparkContext)
+      seen.toArray(Array.empty[(String, String)]).toSeq :+ ("final" -> last)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -20,14 +43,23 @@ object GenExplain {
     val out = Files.createTempDirectory("explain_out_").toString
     ExtractJob.run(spark, spark.read.parquet(corpus), out, JobConfig(buckets = 8))
 
-    def fmt(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+    def fmt(df: => DataFrame): String = {
+      val plans = builtPlans(spark)(df)
+      if (plans.size == 1) plans.head._2
+      else plans.zipWithIndex.map { case ((action, p), i) =>
+        val what = if (action == "final") "final plan"
+          else s"built by `$action` ${i + 1} of ${plans.size - 1}"
+        s"==== $what ====\n$p"
+      }.mkString("\n")
+    }
 
     val sb = new StringBuilder
     sb.append("# EXPLAIN — formatted physical plans of the hot paths\n\n")
     sb.append("Generated by `graft.tools.GenExplain` (regenerate after plan-affecting\n")
-    sb.append("changes). PlanSpec asserts the properties these plans must keep.\n\n")
+    sb.append("changes). PlanSpec asserts the properties these plans must keep.\n")
+    sb.append("Where an operator materializes a table (lazy `localCheckpoint`), the\n")
+    sb.append("final plan reads it as `Scan ExistingRDD`; the plan that builds each\n")
+    sb.append("such table is printed before the final plan.\n\n")
 
     sb.append("## 1. Extraction hot path (scan → filters → kernel), lang-filtered\n\n")
     sb.append("Note `PushedFilters: [IsNotNull(url), EqualTo(lang,en)]` on the scan and\n")

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -440,5 +440,35 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LeftAnti"), p.take(1500))
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoop"), p.take(800))
+  }
+
+  /** Final plan plus the plan of every table the operator materializes. */
+  private def builtPlans(build: => DataFrame): String =
+    graft.tools.GenExplain.builtPlans(spark)(build).map(_._2).mkString("\n")
+
+  test("k-gram sketches are the native graft_shingle_hashes expression: " +
+    "no operator re-splits its text once per shingle inside a lambda " +
+    "(slice(split(...)) per element)") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_plan_sketch_").toString
+    Seq((1L, "a b c d e", "en"), (2L, "a b c d f", "en"))
+      .toDF("doc_id", "text", "lang").write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "minhashNearDups" -> (() => Dedup.minhashNearDups(docs, "doc_id", "text")),
+      "minhashClusterEdges" -> (() => Dedup.minhashClusterEdges(docs, "doc_id", "text")),
+      "ngramJaccardPairs" -> (() =>
+        Dedup.ngramJaccardPairs(docs, "doc_id", "text", Seq("lang"))),
+      "removeDuplicatedSpans" -> (() =>
+        Dedup.removeDuplicatedSpans(docs, "doc_id", "text")))
+    for ((name, op) <- ops) {
+      val p = builtPlans(op())
+      assert(p.contains("graft_shingle_hashes("), s"$name:\n${p.take(2000)}")
+      assert(!p.contains("slice(split("), s"$name:\n${p.take(2000)}")
+      if (name.startsWith("minhash"))
+        assert(p.contains("graft_minhash(") && !p.contains("zip_with("),
+          s"$name:\n${p.take(2000)}")
+    }
   }
 }
