@@ -1037,13 +1037,12 @@ object SparkEntry {
       val filt = Dedup.bloomBuild(base, "text", bits = 1 << 10, numHashes = 4)
       val scr = Dedup.bloomScreen(docs, "doc_id", "text", filt,
         bits = 1 << 10, numHashes = 4)
-      graft.expr.KernelExpressions.register(s)
       // exact membership: hash-keyed join with text-equality residual
       // (the q53 collision-safe shape) — never a string-keyed shuffle.
       // Materialized once (round 7): the base-key distinct and the outer
       // join probe side both consume it.
       val keyed = docs.select(col("doc_id"), col("text"),
-        expr("graft_fnv1a64(text)").as("h"))
+        graft.expr.KernelExpressions.fnv1a64(col("text")).as("h"))
         .localCheckpoint(eager = false)
       val baseKeys = keyed.filter(col("doc_id") % 2 === 0)
         .select(col("h").as("bh"), col("text").as("btext")).distinct()

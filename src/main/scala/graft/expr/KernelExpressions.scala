@@ -6,119 +6,82 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions for the kernel's hash functions.
-  *
-  * These are the custom-`Expression` tier of the extension ladder (compose
-  * built-ins → native Expression → custom plan): unlike a Scala UDF or a
-  * typed `Dataset.map`, they participate in whole-stage codegen — the
-  * generated Java calls the kernel's static method directly on the
-  * column's UTF8String, with no row deserialization, no closure dispatch
-  * and no typed-boundary `DeserializeToObject`/`SerializeFromObject` pair
-  * around them. Used by Dedup.simhashNearDups so the whole candidate
-  * pipeline stays inside codegen. (Scala objects emit static forwarders,
-  * so `graft.kernel.Hashing.simhash64(String)` is a valid Java call in
-  * generated code.)
-  */
-case class SimHash64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string argument")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    Hashing.simhash64(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.kernel.Hashing.simhash64($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64Expr =
-    copy(child = newChild)
+/** A long-valued scalar kernel function: its SQL name, its argument type
+  * and the static `graft.kernel.Hashing` method both evaluation paths call
+  * (Scala objects emit static forwarders, so `graft.kernel.Hashing.mix(x)`
+  * is a valid Java call in generated code). */
+sealed abstract class KernelFn(val name: String, val argType: DataType)
+    extends Serializable {
+  /** Interpreted path: the value for a non-null argument. */
+  def eval(arg: Any): Long
+  /** Codegen path: the same call as Java source over `arg`. */
+  def code(arg: String): String
 }
 
-case class RollingFingerprintExpr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string argument")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fingerprint64"
+object KernelFn {
+  /** SimHash-64 over whitespace tokens (near-duplicate fingerprint). */
+  case object SimHash64 extends KernelFn("graft_simhash64", StringType) {
+    def eval(arg: Any): Long = Hashing.simhash64(arg.toString)
+    def code(arg: String): String = s"graft.kernel.Hashing.simhash64($arg.toString())"
+  }
+  /** Order-sensitive rolling fingerprint of a string. */
+  case object Fingerprint64 extends KernelFn("graft_fingerprint64", StringType) {
+    def eval(arg: Any): Long = Hashing.rollingFingerprint(arg.toString)
+    def code(arg: String): String =
+      s"graft.kernel.Hashing.rollingFingerprint($arg.toString())"
+  }
+  /** splitmix64 finisher over a bigint — the engine-independent row hash
+    * behind deterministic sampling: unlike `rand()` it is replayable under
+    * task retry, and unlike `xxhash64` the DuckDB oracle re-derives it in
+    * HUGEINT mod-2^64 SQL (the mixCtes of q33). */
+  case object Mix64 extends KernelFn("graft_mix64", LongType) {
+    def eval(arg: Any): Long = Hashing.mix(arg.asInstanceOf[Long])
+    def code(arg: String): String = s"graft.kernel.Hashing.mix($arg)"
+  }
+  /** FNV-1a with the splitmix64 finisher over a string: the per-gram hash
+    * behind DSIR buckets and Bloom probes, re-derived by the oracle's
+    * HUGEINT per-character fold + mix chain. */
+  case object Fnv1a64 extends KernelFn("graft_fnv1a64", StringType) {
+    def eval(arg: Any): Long = Hashing.fnv1a(arg.toString, 0L)
+    def code(arg: String): String = s"graft.kernel.Hashing.fnv1a($arg.toString(), 0L)"
+  }
+  /** Q20 fixed-point integer log2 of a positive bigint — the float-free
+    * log behind DSIR, bigram-LM and BM25 scores; the oracle unrolls the
+    * same 20-step digit recurrence in HUGEINT SQL. */
+  case object Ilog2Q20 extends KernelFn("graft_ilog2q20", LongType) {
+    def eval(arg: Any): Long = Hashing.ilog2Q20(arg.asInstanceOf[Long])
+    def code(arg: String): String = s"graft.kernel.Hashing.ilog2Q20($arg)"
+  }
 
-  override def nullSafeEval(input: Any): Any =
-    Hashing.rollingFingerprint(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.kernel.Hashing.rollingFingerprint($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingFingerprintExpr =
-    copy(child = newChild)
+  val all: Seq[KernelFn] = Seq(SimHash64, Fingerprint64, Mix64, Fnv1a64, Ilog2Q20)
 }
 
-/** splitmix64 finisher over a LONG column — the engine-independent row
-  * hash behind deterministic sampling (ScalePatterns.stratifiedSample):
-  * unlike `rand()` it is replayable under task retry, and unlike
-  * `xxhash64` it is re-derivable in the DuckDB oracle's HUGEINT mod-2^64
-  * SQL (the same mixCtes used by q33). */
-case class Mix64Expr(child: Expression) extends UnaryExpression {
+/** Native Catalyst expression for a [[KernelFn]] — the custom-`Expression`
+  * tier of the extension ladder (compose built-ins → native Expression →
+  * custom plan): unlike a Scala UDF or a typed `Dataset.map`, it takes part
+  * in whole-stage codegen — the generated Java calls the kernel's static
+  * method directly on the column value, with no row deserialization, no
+  * closure dispatch and no typed-boundary `DeserializeToObject`/
+  * `SerializeFromObject` pair around it. Prints as `graft_<fn>(child)`. */
+case class KernelFnExpr(fn: KernelFn, child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a bigint argument")
+    if (child.dataType == fn.argType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a ${fn.argType.sql.toLowerCase} argument")
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_mix64"
+  override def prettyName: String = fn.name
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
 
-  override def nullSafeEval(input: Any): Any =
-    Hashing.mix(input.asInstanceOf[Long])
+  override def nullSafeEval(input: Any): Any = fn.eval(input)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.kernel.Hashing.mix($c)")
+    defineCodeGen(ctx, ev, fn.code)
 
-  override protected def withNewChildInternal(newChild: Expression): Mix64Expr =
-    copy(child = newChild)
-}
-
-/** Kernel FNV-1a (with the splitmix64 finisher baked in — see
-  * Hashing.fnv1a) over a STRING column: the per-gram hash behind DSIR
-  * bucket assignment (TextOps.dsirBucketWeights). Engine-independent and
-  * re-derivable in the oracle's HUGEINT per-character fold + mix chain. */
-case class Fnv1a64Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a string argument")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fnv1a64"
-
-  override def nullSafeEval(input: Any): Any =
-    Hashing.fnv1a(input.asInstanceOf[UTF8String].toString, 0L)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.kernel.Hashing.fnv1a($c.toString(), 0L)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv1a64Expr =
-    copy(child = newChild)
-}
-
-/** Q20 fixed-point integer log2 (Hashing.ilog2Q20) over a positive LONG
-  * column — the float-free log behind DSIR's importance weights. The
-  * DuckDB oracle unrolls the identical 20-step digit recurrence in
-  * HUGEINT SQL, so log-ratio scores are integer-exact cross-engine. */
-case class Ilog2Q20Expr(child: Expression) extends UnaryExpression {
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$prettyName requires a bigint argument")
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_ilog2q20"
-
-  override def nullSafeEval(input: Any): Any =
-    Hashing.ilog2Q20(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.kernel.Hashing.ilog2Q20($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Ilog2Q20Expr =
+  override protected def withNewChildInternal(newChild: Expression): KernelFnExpr =
     copy(child = newChild)
 }
 
@@ -231,22 +194,19 @@ object Sketches {
   }
 }
 
+/** The one way a kernel function reaches a plan: the Column helpers build
+  * the native expressions directly (through [[ExpressionColumns]]), so an
+  * operator never touches the session's function registry and never
+  * parses a column name as SQL. [[register]] is the SQL entry point only. */
 object KernelExpressions {
 
-  /** Idempotent registration in the session's function registry; the
-    * expressions are then usable from SQL and via the Column helpers. */
+  /** Idempotent registration in the session's function registry, for
+    * `spark.sql` users. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64Expr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_fingerprint64",
-      exprs => RollingFingerprintExpr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_mix64",
-      exprs => Mix64Expr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_fnv1a64",
-      exprs => Fnv1a64Expr(exprs.head), "built-in")
-    registry.createOrReplaceTempFunction("graft_ilog2q20",
-      exprs => Ilog2Q20Expr(exprs.head), "built-in")
+    for (fn <- KernelFn.all)
+      registry.createOrReplaceTempFunction(fn.name,
+        exprs => KernelFnExpr(fn, exprs.head), "built-in")
     registry.createOrReplaceTempFunction("graft_shingle_hashes",
       exprs => ShingleHashesExpr(exprs.head, intArg(exprs(1))), "built-in")
     registry.createOrReplaceTempFunction("graft_minhash",
@@ -258,30 +218,21 @@ object KernelExpressions {
     e.eval().asInstanceOf[Number].intValue
   }
 
-  /** Column helpers (register + refer by name — version-stable across the
-    * Spark 4 Column/ColumnNode split). */
-  def simhash64(spark: SparkSession, colName: String): Column = {
-    register(spark)
-    expr(s"graft_simhash64($colName)")
-  }
+  private def kernel(fn: KernelFn, c: Column): Column =
+    ExpressionColumns.column(KernelFnExpr(fn, ExpressionColumns.expression(c)))
 
-  def fingerprint64(spark: SparkSession, colName: String): Column = {
-    register(spark)
-    expr(s"graft_fingerprint64($colName)")
-  }
+  def simhash64(text: Column): Column = kernel(KernelFn.SimHash64, text)
+  def fingerprint64(text: Column): Column = kernel(KernelFn.Fingerprint64, text)
+  def mix64(x: Column): Column = kernel(KernelFn.Mix64, x)
+  def fnv1a64(text: Column): Column = kernel(KernelFn.Fnv1a64, text)
+  def ilog2q20(n: Column): Column = kernel(KernelFn.Ilog2Q20, n)
 
-  def mix64(spark: SparkSession, colName: String): Column = {
-    register(spark)
-    expr(s"graft_mix64($colName)")
-  }
-
-  /** `graft_shingle_hashes(text, k)` and `graft_minhash(fps, numHashes)`
-    * as Columns — built from the expression directly, so they need no
-    * registered session. */
+  /** `graft_shingle_hashes(text, k)`: word k-gram hashes. */
   def shingleHashes(text: Column, k: Int): Column =
     ExpressionColumns.column(
       ShingleHashesExpr(ExpressionColumns.expression(text), k))
 
+  /** `graft_minhash(fps, numHashes)`: MinHash signature. */
   def minhash(fps: Column, numHashes: Int): Column =
     ExpressionColumns.column(
       MinHashExpr(ExpressionColumns.expression(fps), numHashes))

@@ -268,11 +268,8 @@ object Dedup {
     * `bandSize`; each band's slice hashes structurally to one bucket key.
     * Docs sharing any band bucket become candidate pairs. */
   def bandKeys(sig: Column, numBands: Int, bandSize: Int): Column =
-    transform(
-      sequence(lit(0), lit(numBands - 1)),
-      b => struct(
-        b.as("band"),
-        xxhash64(slice(sig, b * bandSize + 1, lit(bandSize))).as("bucket")))
+    array((0 until numBands).map(b => struct(lit(b).as("band"),
+      xxhash64(slice(sig, b * bandSize + 1, bandSize)).as("bucket"))): _*)
 
   /** Word-set Jaccard similarity of two token arrays (dedups multiplicity,
     * like classic shingle-set Jaccard). */
@@ -459,21 +456,20 @@ object Dedup {
     * bits ⇒ at least one of the 4 16-bit blocks is equal), verified with
     * exact Hamming distance. Shuffles on the 16-bit block keys. The
     * fingerprint is a native codegen'd Catalyst expression
-    * (graft.expr.SimHash64Expr), so the whole candidate pipeline stays
+    * ([[KernelExpressions.simhash64]]), so the whole candidate pipeline stays
     * inside whole-stage codegen — no typed boundary. */
   def simhashNearDups(
       df: DataFrame,
       idCol: String,
       textCol: String,
       maxHamming: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
     // materialized once: the block self-join reads the fingerprints per
     // side, and the simhash kernel scan must not re-run per side (the
     // shingleTable rationale; 16 bytes/row, tiny)
     val sims = df
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
-      .withColumn("simhash", expr("graft_simhash64(coalesce(text, ''))"))
+      .withColumn("simhash",
+        KernelExpressions.simhash64(coalesce(col("text"), lit(""))))
       .select(col("id"), col("simhash"))
       .localCheckpoint(eager = false)
 
@@ -940,7 +936,6 @@ object Dedup {
       bucketStarEdges: Boolean = false): DataFrame = {
     require(holdoutPerMille >= 0 && holdoutPerMille <= 1000,
       s"holdoutPerMille must be in [0,1000], got $holdoutPerMille")
-    val spark = df.sparkSession
     // bucketStarEdges (opt-in, the at-scale path): cluster on LSH-candidate
     // connectivity via linear-fan-out star edges instead of verified pairs.
     // Conservative for splitting — verified components are a refinement of
@@ -957,9 +952,8 @@ object Dedup {
       .join(comp, Seq("doc_id"), "left_outer")
       .withColumn("component", coalesce(col("component"), col("doc_id")))
       .withColumn("split",
-        when(pmod(graft.expr.KernelExpressions.mix64(spark, "component"),
-          lit(1000L)) < holdoutPerMille.toLong, lit("eval"))
-          .otherwise(lit("train")))
+        when(pmod(KernelExpressions.mix64(col("component")), lit(1000L)) <
+          holdoutPerMille.toLong, lit("eval")).otherwise(lit("train")))
   }
 
   // --- Bloom-filter membership (Dolma's BFF deduper pattern, Soldaini
@@ -984,12 +978,11 @@ object Dedup {
       s"bits must be a power of two >= 64, got $bits")
     require(numHashes >= 1 && numHashes <= 16,
       s"numHashes must be in [1,16], got $numHashes")
-    graft.expr.KernelExpressions.register(keyed.sparkSession)
     keyed
       .select(keyed.columns.map(col) :+
         explode(sequence(lit(0L), lit(numHashes - 1L))).as("i"): _*)
       .withColumn("p",
-        expr("graft_mix64(h + i)").bitwiseAND(lit(bits - 1L)))
+        KernelExpressions.mix64(col("h") + col("i")).bitwiseAND(lit(bits - 1L)))
       .withColumn("word", shiftright(col("p"), 5))
       .withColumn("mask", expr("shiftleft(1L, cast(p & 31 as int))"))
       .drop("h", "i", "p")
@@ -1009,9 +1002,8 @@ object Dedup {
   def bloomBuild(df: DataFrame, keyCol: String, bits: Int = 1 << 16,
       numHashes: Int = 4): DataFrame = {
     val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
     val set = bloomProbes(
-      df.select(expr(s"graft_fnv1a64($keyCol)").as("h")), bits, numHashes)
+      df.select(KernelExpressions.fnv1a64(col(keyCol)).as("h")), bits, numHashes)
       .groupBy(col("word")).agg(expr("bit_or(mask)").as("bits32"))
     spark.range(bits / 32).toDF("word")
       .join(broadcast(set), Seq("word"), "left_outer")
@@ -1029,10 +1021,9 @@ object Dedup {
   def bloomScreen(df: DataFrame, idCol: String, keyCol: String,
       filter: DataFrame, bits: Int = 1 << 16,
       numHashes: Int = 4): DataFrame = {
-    graft.expr.KernelExpressions.register(df.sparkSession)
     bloomProbes(
       df.select(col(idCol).as("doc_id"),
-        expr(s"graft_fnv1a64($keyCol)").as("h")), bits, numHashes)
+        KernelExpressions.fnv1a64(col(keyCol)).as("h")), bits, numHashes)
       .join(broadcast(filter), Seq("word"), "left_outer")
       .groupBy(col("doc_id"))
       .agg(min(when(col("bits32").bitwiseAND(col("mask")) === col("mask"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.expr.KernelExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,13 +40,13 @@ object ScalePatterns {
     *   - engine-reproducible: the splitmix64 mixer is re-derived in the
     *     DuckDB oracle's HUGEINT mod-2^64 SQL (q44), so the sample
     *     membership itself is value-checked cross-engine;
-    *   - native codegen'd expression (Mix64Expr), not a UDF.
+    *   - native codegen'd expression ([[KernelExpressions.mix64]]), not a
+    *     UDF; the id column is referenced by name, never parsed as SQL.
     */
   def stratifiedSample(df: DataFrame, idCol: String, strataCol: String,
       quotasPerMille: Map[String, Int],
       defaultPerMille: Int): DataFrame = {
-    val bucket = pmod(
-      graft.expr.KernelExpressions.mix64(df.sparkSession, idCol), lit(1000L))
+    val bucket = pmod(KernelExpressions.mix64(col(idCol)), lit(1000L))
     val quota = quotasPerMille.foldLeft(lit(defaultPerMille).cast("long")) {
       case (acc, (stratum, q)) =>
         when(col(strataCol) === stratum, lit(q.toLong)).otherwise(acc)
@@ -85,7 +86,6 @@ object ScalePatterns {
       "shares are ppm values in [0, 1000000]")
     require(sharePpm.values.sum <= 1000000L,
       s"shares sum to ${sharePpm.values.sum} ppm > 10^6")
-    val spark = df.sparkSession
     val toks = df.select(col(idCol).as("doc_id"),
       col(sourceCol).as("source"),
       TextOps.tokenCount(coalesce(col(textCol), lit(""))).as("n_tokens"))
@@ -105,7 +105,7 @@ object ScalePatterns {
       .join(broadcast(rates), Seq("source"))
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("share_ppm"), col("rate_q20"),
-        (graft.expr.KernelExpressions.mix64(spark, "doc_id")
+        (KernelExpressions.mix64(col("doc_id"))
           .bitwiseAND(lit(1048575L)) < col("rate_q20")).as("kept"))
   }
 

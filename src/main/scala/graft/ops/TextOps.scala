@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 
+import graft.expr.KernelExpressions.{fnv1a64, ilog2q20}
 import graft.kernel.{Hashing, TextQuality}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -708,12 +709,10 @@ object TextOps {
     concat(nw, bigrams)
   }
 
-  private def dsirBucket(gram: Column, buckets: Int): Column =
-    call_function("graft_fnv1a64", gram)
-      .bitwiseAND(lit((buckets - 1).toLong))
-
-  private def ilog2q20(c: Column): Column =
-    call_function("graft_ilog2q20", c)
+  /** `fnv1a64(word) & (buckets - 1)`: the word/gram bucket of DSIR and the
+    * bigram LM (`buckets` a power of two). */
+  private def hashBucket(gram: Column, buckets: Int): Column =
+    fnv1a64(gram).bitwiseAND(lit((buckets - 1).toLong))
 
   /** DSIR importance weights over hashed n-gram buckets: learn, from a
     * corpus with a boolean target-membership column, the per-bucket
@@ -723,7 +722,7 @@ object TextOps {
     * fnv1a64(gram) & (buckets-1) (buckets must be a power of two so the
     * signed mask equals the oracle's unsigned `% buckets`). All math is
     * INTEGER: logs are Q20 fixed-point via the kernel's digit-recurrence
-    * ilog2Q20 ([[graft.expr.Ilog2Q20Expr]]), so weights are bit-identical
+    * ilog2Q20 ([[graft.expr.KernelFn.Ilog2Q20]]), so weights are bit-identical
     * to the DuckDB oracle's unrolled HUGEINT chain — no float logs exist
     * anywhere in the operator.
     *
@@ -743,11 +742,10 @@ object TextOps {
     require(buckets >= 2 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two, got $buckets")
     val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
     val counts = df
       .select(col(targetCol).cast("boolean").as("y"),
         explode(dsirGrams(col(textCol))).as("gram"))
-      .select(col("y"), dsirBucket(col("gram"), buckets).as("bucket"))
+      .select(col("y"), hashBucket(col("gram"), buckets).as("bucket"))
       .groupBy(col("bucket"))
       .agg(sum(when(col("y"), 1L).otherwise(0L)).as("tc"),
         sum(when(col("y"), 0L).otherwise(1L)).as("rc"))
@@ -781,10 +779,9 @@ object TextOps {
     * combines to one partial row per (doc, partition). */
   def dsirScores(df: DataFrame, idCol: String, textCol: String,
       weights: DataFrame, buckets: Int = 4096): DataFrame = {
-    graft.expr.KernelExpressions.register(df.sparkSession)
     df.select(col(idCol).as("doc_id"),
         explode(dsirGrams(col(textCol))).as("gram"))
-      .select(col("doc_id"), dsirBucket(col("gram"), buckets).as("bucket"))
+      .select(col("doc_id"), hashBucket(col("gram"), buckets).as("bucket"))
       .join(broadcast(weights.select(col("bucket"), col("weight_q20"))),
         Seq("bucket"))
       .groupBy(col("doc_id"))
@@ -800,12 +797,11 @@ object TextOps {
   private[ops] def bigramBucketPairs(text: Column, buckets: Int): Column = {
     val nw = filter(split(coalesce(text, lit("")), " "),
       w => w =!= lit(""))
-    def bk(c: Column) = call_function("graft_fnv1a64", c)
-      .bitwiseAND(lit((buckets - 1).toLong))
     filter(
       zip_with(nw, slice(nw, lit(2), greatest(size(nw) - 1, lit(0))),
         (a, b) => when(b.isNotNull,
-          struct(bk(a).as("ctx"), bk(b).as("nxt")))),
+          struct(hashBucket(a, buckets).as("ctx"),
+            hashBucket(b, buckets).as("nxt")))),
       p => p.isNotNull)
   }
 
@@ -827,7 +823,6 @@ object TextOps {
       buckets: Int = 1024): DataFrame = {
     require(buckets >= 2 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two, got $buckets")
-    graft.expr.KernelExpressions.register(df.sparkSession)
     df.filter(col(targetCol).cast("boolean"))
       .select(explode(bigramBucketPairs(col(textCol), buckets)).as("p"))
       .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
@@ -851,7 +846,6 @@ object TextOps {
     * map-side combine. */
   def bigramLmScores(df: DataFrame, idCol: String, textCol: String,
       pairCounts: DataFrame, buckets: Int = 1024): DataFrame = {
-    graft.expr.KernelExpressions.register(df.sparkSession)
     // materialized once (round 7): the context-total re-aggregate and the
     // pair-count broadcast are two consumers of the trained table — without
     // the checkpoint each re-ran the training corpus pass. Capped at ≤ B²
@@ -937,8 +931,6 @@ object TextOps {
     require(terms.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
       "query terms must be non-empty and whitespace-free")
     require(terms.distinct.size == terms.size, "query terms must be distinct")
-    val spark = df.sparkSession
-    graft.expr.KernelExpressions.register(spark)
     val q = 1048576L // 2^20
     def text = coalesce(col(textCol), lit(""))
     def dlOf(c: Column) =

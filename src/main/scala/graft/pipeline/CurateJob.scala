@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.ops.{Dedup, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Knobs of the curation funnel. Defaults mirror the q50 filter funnel and
@@ -94,8 +94,9 @@ final case class CurateStats(input: Long, kept: Long, drops: Map[String, Long])
   *   - all four quality filters are row-local Column expressions computed
   *     in ONE projection pass (no per-filter scans);
   *   - first-match-wins verdict precedence (exact_dup > near_dup >
-  *     too_short > lang_filter > low_quality > repetitive > kept) makes
-  *     drop counts additive — the funnel reads like a report;
+  *     too_short > lang_filter > low_quality > [gopher_filter] >
+  *     repetitive > kept) makes drop counts additive — the funnel reads
+  *     like a report;
   *   - the verdict table is written for EVERY input doc (auditability +
   *     resume substrate), the curated table only for keepers;
   *   - PII scrubbing runs only on keepers (codegen'd regexp chain).
@@ -118,6 +119,42 @@ object CurateJob {
         when(col(idCol).isNull, lit(null).cast("long"))
           .otherwise(xxhash64(col(idCol).cast("string")))
     }
+  }
+
+  /** The row-local funnel signals over `textCol`, in one projection:
+    * [[TextOps.repetitionSignals]], `n_chars`, `quality` and, with
+    * `gopherFilter` on, the Gopher signal struct `g`. */
+  private[graft] def funnelSignals(df: DataFrame, textCol: String,
+      cfg: CurateConfig): DataFrame = {
+    val sig = TextOps.repetitionSignals(df, textCol,
+        repetitiveTopPpm = cfg.repetitiveTopPpm)
+      .withColumn("n_chars", length(col(textCol)).cast("long"))
+      .withColumn("quality", TextOps.qualityProxy(col(textCol)))
+    if (cfg.gopherFilter)
+      sig.withColumn("g", struct(TextOps.gopherSignalCols(col(textCol)): _*))
+    else sig
+  }
+
+  /** The funnel verdict over [[funnelSignals]] and a `lang` column:
+    * too_short > lang_filter > low_quality > gopher_filter > repetitive >
+    * kept. The batch verdicts and the streaming funnel
+    * (StreamingExtract.curateVerdicts) both use it. */
+  private[graft] def funnelVerdict(cfg: CurateConfig): Column = {
+    val gopherFails =
+      if (!cfg.gopherFilter) lit(false)
+      else col("g.word_count") < cfg.gopherMinWords ||
+        col("g.word_count") > cfg.gopherMaxWords ||
+        col("g.mean_word_len") < cfg.gopherMinMeanWordLen ||
+        col("g.mean_word_len") > cfg.gopherMaxMeanWordLen ||
+        col("g.alpha_word_ppm") < cfg.gopherMinAlphaPpm ||
+        col("g.symbol_ppm") > cfg.gopherMaxSymbolPpm ||
+        col("g.stop_hits") < cfg.gopherMinStopHits
+    when(col("n_chars") < cfg.minChars, "too_short")
+      .when(!col("lang").isin(cfg.langs.map(lit): _*), "lang_filter")
+      .when(col("quality") < cfg.minQuality, "low_quality")
+      .when(gopherFails, "gopher_filter")
+      .when(col("repetitive"), "repetitive")
+      .otherwise("kept")
   }
 
   /** Per-document verdicts: (doc_id key, verdict) for every input row. */
@@ -210,36 +247,11 @@ object CurateJob {
     // row-local quality signals in one pass (over the line-deduped text
     // when that stage is on — a doc that is boilerplate-only must fail
     // too_short AFTER its boilerplate is stripped, the C4 order)
-    val sig0 = TextOps.repetitionSignals(sigSrc, sigText,
-      repetitiveTopPpm = cfg.repetitiveTopPpm)
-      .withColumn("n_chars", length(col(sigText)).cast("long"))
-      .withColumn("quality", TextOps.qualityProxy(col(sigText)))
-      .withColumn("k", md5(col("text")))
-    val sig =
-      if (cfg.gopherFilter) {
-        val g = struct(TextOps.gopherSignalCols(col(sigText)): _*)
-        sig0.withColumn("g", g)
-      } else sig0
-
-    val gopherFails: org.apache.spark.sql.Column =
-      if (!cfg.gopherFilter) lit(false)
-      else col("g.word_count") < cfg.gopherMinWords ||
-        col("g.word_count") > cfg.gopherMaxWords ||
-        col("g.mean_word_len") < cfg.gopherMinMeanWordLen ||
-        col("g.mean_word_len") > cfg.gopherMaxMeanWordLen ||
-        col("g.alpha_word_ppm") < cfg.gopherMinAlphaPpm ||
-        col("g.symbol_ppm") > cfg.gopherMaxSymbolPpm ||
-        col("g.stop_hits") < cfg.gopherMinStopHits
-
+    val sig = funnelSignals(sigSrc, sigText, cfg).withColumn("k", md5(col("text")))
     val verdictExpr =
       when(col("x_exact"), "exact_dup")
         .when(col("x_near"), "near_dup")
-        .when(col("n_chars") < cfg.minChars, "too_short")
-        .when(!col("lang").isin(cfg.langs.map(lit): _*), "lang_filter")
-        .when(col("quality") < cfg.minQuality, "low_quality")
-        .when(gopherFails, "gopher_filter")
-        .when(col("repetitive"), "repetitive")
-        .otherwise("kept")
+        .otherwise(funnelVerdict(cfg))
     val outCols =
       Seq(col("doc_id"), col("k").as("content_hash"),
         verdictExpr.as("verdict")) ++

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.DocResult
-import graft.pipeline.{ExtractJob, JobConfig}
+import graft.pipeline.{CurateConfig, CurateJob, ExtractJob, JobConfig}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -92,8 +92,9 @@ object StreamingExtract {
   /** Streaming curation — CurateJob's funnel applied continuously with
     * BATCH-PARITY verdict precedence (exact_dup > funnel reasons > kept):
     *
-    *   - the funnel filters (length / language / quality / repetition) are
-    *     row-local Column expressions, so they stream unchanged — they are
+    *   - the funnel filters (length / language / quality / [Gopher] /
+    *     repetition) are CurateJob's own row-local funnel Column
+    *     ([[CurateJob.funnelVerdict]]), so they stream unchanged — they are
     *     evaluated BEFORE the stateful stage and carried into it;
     *   - exact dedup runs as `flatMapGroupsWithState` keyed on the content
     *     hash: the FIRST document seen per hash keeps its funnel verdict,
@@ -113,22 +114,15 @@ object StreamingExtract {
     * Near-dup LSH needs cross-batch candidate JOINS and stays a batch
     * (CurateJob) concern; run it over the curated table periodically. */
   def curateVerdicts(docs: Dataset[DocResult],
-      cfg: graft.pipeline.CurateConfig = graft.pipeline.CurateConfig(),
+      cfg: CurateConfig = CurateConfig(),
       stateTtl: String = ""): Dataset[StreamVerdict] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val text = coalesce($"extracted_text", lit(""))
-    val sig = graft.ops.TextOps.repetitionSignals(
-      docs.toDF().withColumn("curation_text", text), "curation_text",
-      repetitiveTopPpm = cfg.repetitiveTopPpm)
-    val funnel = when(length($"curation_text") < cfg.minChars, "too_short")
-      .when(!$"lang".isin(cfg.langs.map(lit): _*), "lang_filter")
-      .when(graft.ops.TextOps.qualityProxy($"curation_text") < cfg.minQuality,
-        "low_quality")
-      .when($"repetitive", "repetitive")
-      .otherwise("kept")
+    val sig = CurateJob.funnelSignals(docs.toDF().withColumn("curation_text",
+      coalesce($"extracted_text", lit(""))), "curation_text", cfg)
     val keyed = sig.select($"url", $"curation_text".as("text"), $"lang",
-      funnel.as("funnel_verdict"), md5($"curation_text").as("content_hash"))
+      CurateJob.funnelVerdict(cfg).as("funnel_verdict"),
+      md5($"curation_text").as("content_hash"))
       .as[(String, String, String, String, String)]
 
     val timeout =

@@ -135,6 +135,9 @@ class ApiSpec extends AnyFunSuite {
     assert(r.getAs[String]("c") == "text")
     assert(r.getAs[String]("x").startsWith("The court heard the case"))
     assert(!r.getAs[String]("x").contains("x")) // nav link dropped
+    // the native simhash reads NULL as the empty text, like the kernel API
+    val n = spark.sql("SELECT graft_simhash(CAST(NULL AS STRING))").collect()(0)
+    assert(n.getLong(0) == graft.kernel.Hashing.simhash64(""))
   }
 
   test("detectColumn: detect over an arbitrary binary column") {

@@ -457,6 +457,25 @@ class OpsSpec extends AnyFunSuite {
     assert(math.abs(counts("xx") - 2500) < 250, s"xx=${counts.get("xx")}")
   }
 
+  test("kernel-hash operators take any column name: an id or key column " +
+    "named like an SQL expression returns the same rows as a plain one") {
+    val plain = docs.select(col("id"), col("text"), col("grp"))
+    val odd = plain.toDF("doc-id", "body text", "grp")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val quotas = Map("a" -> 400)
+    val sampled = rows(ScalePatterns.stratifiedSample(plain, "id", "grp", quotas, 700))
+    assert(sampled.nonEmpty && sampled.size < 6, sampled.toString)
+    assert(rows(ScalePatterns.stratifiedSample(odd, "doc-id", "grp", quotas, 700)) == sampled)
+    val filt = Dedup.bloomBuild(plain.filter(col("id") <= 3L), "text", 256, 3)
+    val oddFilt = Dedup.bloomBuild(odd.filter(col("doc-id") <= 3L), "body text", 256, 3)
+    def byWord(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(byWord(oddFilt) == byWord(filt))
+    assert(rows(Dedup.bloomScreen(odd, "doc-id", "body text", oddFilt, 256, 3)) ==
+      rows(Dedup.bloomScreen(plain, "id", "text", filt, 256, 3)))
+  }
+
   test("pii scrub: emails, IPv4s and intl phones masked; near-misses kept") {
     def scrub(s: String): String =
       Seq(s).toDF("t").select(TextOps.scrubPii(col("t")).as("s"))

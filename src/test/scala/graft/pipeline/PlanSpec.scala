@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.ops.{Dedup, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -442,9 +444,9 @@ class PlanSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoop"), p.take(800))
   }
 
-  /** Final plan plus the plan of every table the operator materializes. */
-  private def builtPlans(build: => DataFrame): String =
-    graft.tools.GenExplain.builtPlans(spark)(build).map(_._2).mkString("\n")
+  /** The plan of every table the operator materializes, then its final plan. */
+  private def builtPlans(build: => DataFrame): Seq[String] =
+    graft.tools.GenExplain.builtPlans(spark)(build).map(_._2)
 
   test("k-gram sketches are the native graft_shingle_hashes expression: " +
     "no operator re-splits its text once per shingle inside a lambda " +
@@ -463,12 +465,41 @@ class PlanSpec extends AnyFunSuite {
       "removeDuplicatedSpans" -> (() =>
         Dedup.removeDuplicatedSpans(docs, "doc_id", "text")))
     for ((name, op) <- ops) {
-      val p = builtPlans(op())
+      val plans = builtPlans(op())
+      val p = plans.mkString("\n")
       assert(p.contains("graft_shingle_hashes("), s"$name:\n${p.take(2000)}")
       assert(!p.contains("slice(split("), s"$name:\n${p.take(2000)}")
-      if (name.startsWith("minhash"))
+      if (name.startsWith("minhash")) {
         assert(p.contains("graft_minhash(") && !p.contains("zip_with("),
           s"$name:\n${p.take(2000)}")
+        // the band table: bands are a literal array of per-band structs —
+        // no lambda re-evaluating the signature once per band
+        val bandPlans = plans.filter(_.contains("graft_minhash("))
+        assert(bandPlans.nonEmpty, s"$name:\n${p.take(2000)}")
+        for (bp <- bandPlans) {
+          assert(!bp.contains("lambdafunction") && !bp.contains("transform("),
+            s"$name:\n$bp")
+          assert("graft_minhash\\(".r.findAllIn(bp).size == 1, s"$name:\n$bp")
+        }
+      }
     }
+  }
+
+  test("kernel functions reach operator plans only as KernelExpressions " +
+    "Columns: no registry call and no graft_ function name outside the " +
+    "expression module and the SQL registration") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val allowed = Set("graft/expr/KernelExpressions.scala", "graft/api/GraftFunctions.scala")
+      .map(root.resolve(_).normalize)
+    val files = Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && !allowed(f.normalize)).toSeq
+    assert(files.size > 40, files.size)
+    val banned = """KernelExpressions\.register\(|"graft_""".r
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if banned.findFirstIn(line).nonEmpty
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.pipeline.{ExtractJob, JobConfig, SynthSource}
+import graft.pipeline.{CurateConfig, CurateJob, ExtractJob, JobConfig, SynthSource}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -132,6 +132,43 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => r.getAs[String]("url") -> r.getAs[String]("verdict")).toMap
     assert(v2("https://b/9") == "exact_dup", v2.toString)
     assert(v2.size == 4)
+  }
+
+  test("streaming curation applies the Gopher thresholds: a doc failing " +
+    "them gets gopher_filter, as in CurateJob.verdicts") {
+    val inputDir = tmp(); val outDir = tmp(); val checkpoint = tmp()
+    def page(url: String, text: String) =
+      (url, new java.sql.Timestamp(1735689600000L),
+        ("<html><body><article><p>" + text + "</p></article></body></html>")
+          .getBytes("UTF-8"), "", "en")
+    val prose = (0 until 60).map(i => s"g${2 * i} the g${2 * i + 1}").mkString(" ")
+    val noStopwords = (0 until 80).map(i => s"zq${i}xv word$i").mkString(" ")
+    Seq(page("https://g/1", prose), page("https://g/2", noStopwords))
+      .toDF("url", "warc_ts", "html", "text", "lang")
+      .coalesce(1).write.mode("append").parquet(inputDir)
+    val cfg = CurateConfig(minQuality = 0.0, gopherFilter = true)
+
+    val q = StreamingExtract.curateVerdicts(ExtractJob.transform(spark,
+        spark.readStream.schema(StreamingExtract.pageSchema).parquet(inputDir),
+        JobConfig(buckets = 4)), cfg)
+      .writeStream.format("parquet")
+      .option("path", s"$outDir/verdicts")
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val streamed = spark.read.parquet(s"$outDir/verdicts")
+      .collect().map(r => r.getAs[String]("url") -> r.getAs[String]("verdict")).toMap
+    assert(streamed == Map("https://g/1" -> "kept", "https://g/2" -> "gopher_filter"),
+      streamed.toString)
+
+    val docs = ExtractJob.transform(spark, spark.read.parquet(inputDir),
+      JobConfig(buckets = 4)).toDF()
+    val batch = CurateJob.verdicts(docs, "url", "extracted_text", "lang", cfg)
+      .join(docs.select(xxhash64(col("url")).as("doc_id"), col("url")), "doc_id")
+      .collect().map(r => r.getAs[String]("url") -> r.getAs[String]("verdict")).toMap
+    assert(batch == streamed, batch.toString)
   }
 
   test("streaming near-dup: band-bucket state carries across micro-batch " +
