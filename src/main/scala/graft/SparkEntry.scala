@@ -156,9 +156,9 @@ object SparkEntry {
     // P4/T3 — head truncation: first 5 doc ids per lang
     "q04_slice_head" -> ((s, dir) => {
       t(s, dir, "documents").groupBy(col("lang"))
-        .agg(array_join(transform(
-          slice(sort_array(collect_list(col("doc_id"))), 1, 5),
-          _.cast("string")), ",").as("first5"))
+        .agg(array_join(
+          slice(sort_array(collect_list(col("doc_id"))), 1, 5).cast("array<string>"),
+          ",").as("first5"))
     }),
 
     // P5 — page-list display format over OCR-needing docs per lang
@@ -305,8 +305,8 @@ object SparkEntry {
         .agg(sort_array(collect_list(col("doc_id"))).as("ids"), first(ord).as("ord"))
         .select(col("lang"), col("ord"), concat(prefix.as("p"), fmtList(col("ids"))).as("s"))
         .groupBy(col("lang"))
-        .agg(array_join(transform(sort_array(collect_list(struct(col("ord"), col("s")))),
-          x => x.getField("s")), " | ").as("summary"))
+        .agg(array_join(sort_array(collect_list(struct(col("ord"), col("s"))))
+          .getField("s"), " | ").as("summary"))
       docs.select(col("lang")).distinct()
         .join(parts, Seq("lang"), "left")
         .select(col("lang"), coalesce(col("summary"),
@@ -978,8 +978,8 @@ object SparkEntry {
       val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
         shingleK = 3, numHashes = 32, numBands = 8, threshold = 0.5)
       val scored = docs.select(col("doc_id"),
-        size(array_distinct(filter(split(coalesce(col("text"), lit("")), " "),
-          tk => tk =!= ""))).as("distinct_tokens"))
+        size(array_distinct(array_remove(split(coalesce(col("text"), lit("")), " "),
+          ""))).as("distinct_tokens"))
       Dedup.canonicalByQuality(scored, "doc_id", "distinct_tokens", pairs)
         .select(col("id").as("doc_id"), col("component"),
           col("score").as("distinct_tokens"), col("keeper"))

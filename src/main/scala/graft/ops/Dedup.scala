@@ -769,9 +769,8 @@ object Dedup {
       .join(removalTok, Seq("doc_id", "i"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(
-        array_join(transform(
-          array_sort(collect_list(struct(col("i"), col("t")))),
-          s => s.getField("t")), " ").as("clean_text"),
+        array_join(sort_array(collect_list(struct(col("i"), col("t"))))
+          .getField("t"), " ").as("clean_text"),
         count(lit(1)).as("n_kept"))
     val affectedOut = base.join(affected, Seq("doc_id"))
       .join(rebuilt, Seq("doc_id"), "left_outer")

@@ -142,21 +142,19 @@ object TextOps {
       .filter(col("token") =!= "" && !col("token").contains(sep))
       .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
       .select(col("cnt"),
-        filter(split(col("token"), ""), x => x =!= "").as("syms"))
+        array_remove(split(col("token"), ""), "").as("syms"))
       .localCheckpoint(eager = false)
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     var step = 1
     var exhausted = false
     while (step <= steps && !exhausted) {
-      // guard: sequence(1, 0) would generate a DESCENDING sequence for
-      // single-symbol tokens — emit no pairs for them instead
-      val pairIdx = when(size(col("syms")) >= 2,
-        sequence(lit(1), size(col("syms")) - 1))
-        .otherwise(array().cast("array<int>"))
+      // adjacent symbol pairs: two equal-length slices zipped (empty for
+      // single-symbol tokens)
+      val m = greatest(size(col("syms")) - 1, lit(0))
       val top = vocab
-        .select(col("cnt"), explode(transform(pairIdx,
-          i => struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r")))).as("p"))
+        .select(col("cnt"), explode(arrays_zip(
+          slice(col("syms"), lit(1), m).as("l"),
+          slice(col("syms"), lit(2), m).as("r"))).as("p"))
         .groupBy(col("p.l").as("l"), col("p.r").as("r"))
         .agg(sum(col("cnt")).as("freq"))
         .orderBy(col("freq").desc, col("l").asc, col("r").asc)
@@ -191,7 +189,7 @@ object TextOps {
     val folded = aggregate(syms, lit(""),
       (acc, x) => when(endswith(acc, lit(sep + l)) && x === r, concat(acc, x))
         .otherwise(concat(acc, lit(sep), x)))
-    filter(split(folded, sep), x => x =!= "")
+    array_remove(split(folded, sep), "")
   }
 
   /** BPE merge training with DRIVER-SIDE iterations — trace-identical to
@@ -387,10 +385,10 @@ object TextOps {
   def bpeSymbolCount(text: Column, merges: Seq[(String, String)]): Column = {
     val sep = "\u0001"
     aggregate(
-      filter(split(text, " "), t => t =!= ""),
+      array_remove(split(text, " "), ""),
       lit(0L),
       (acc, tok) => {
-        val syms0 = filter(split(tok, ""), c => c =!= "")
+        val syms0 = array_remove(split(tok, ""), "")
         val merged = merges.foldLeft(syms0) { case (sy, (l, r)) =>
           applyMerge(sy, l, r)
         }
@@ -417,10 +415,15 @@ object TextOps {
     * the CurateJob funnel can fold them into its single row-local
     * projection pass instead of a second scan. */
   def gopherSignalCols(text: Column): Seq[Column] = {
-    val words = filter(split(text, " "), t => t =!= "")
+    val words = array_remove(split(text, " "), "")
     val wc = size(words).cast("long")
-    val sumLen = aggregate(words, lit(0L), (acc, w) => acc + length(w).cast("long"))
-    val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]"))).cast("long")
+    // the split has already decoded malformed UTF-8, so the joined length
+    // is the sum of the word lengths
+    val sumLen = length(array_join(words, "")).cast("long")
+    // words holding an ASCII letter = the non-empty words left once every
+    // character but space and letters is gone
+    val alphaWords = size(array_remove(
+      split(regexp_replace(text, "[^ A-Za-z]", ""), " "), "")).cast("long")
     val ellipses = ((length(text) -
       length(replace(text, lit("..."), lit("")))) / 3).cast("long")
     val hashes = (length(text) -
@@ -488,10 +491,9 @@ object TextOps {
         when(array_contains(col("banned_lines"), col("line")), lit(true)))
       .groupBy(col(idCol))
       .agg(
-        array_join(transform(
-          array_sort(collect_list(when(col("banned").isNull,
-            struct(col("idx"), col("line"))))),
-          s => s.getField("line")), "\n").as("clean_text"),
+        array_join(sort_array(collect_list(when(col("banned").isNull,
+          struct(col("idx"), col("line"))))).getField("line"), "\n")
+          .as("clean_text"),
         count(when(col("banned").isNull, 1)).as("kept_lines"),
         count(when(col("banned") === true, 1)).as("dropped_lines"))
   }
@@ -694,19 +696,16 @@ object TextOps {
 
   /** DSIR feature grams (Xie et al., "Data Selection for Language Models
     * via Importance Resampling", NeurIPS'23): word unigrams + bigrams over
-    * single-space-separated text, empty tokens dropped. Pure Column HOFs.
-    * `nw` is referenced a constant number of times PER ROW (never per
-    * element — the measured >30× HOF re-inline trap applies to per-element
-    * re-evaluation only); bigrams come from one `zip_with` of the word
-    * list against its own tail, with the final short-zip null filtered. */
+    * single-space-separated text, empty tokens dropped. `nw` is
+    * referenced a constant number of times PER ROW (never per element —
+    * the measured >30× HOF re-inline trap applies to per-element
+    * re-evaluation only); bigrams come from one `zip_with` of two
+    * equal-length slices of the word list (words 1..n−1 and 2..n). */
   private[ops] def dsirGrams(text: Column): Column = {
-    val nw = filter(split(coalesce(text, lit("")), " "),
-      w => w =!= lit(""))
-    val bigrams = filter(
-      zip_with(nw, slice(nw, lit(2), greatest(size(nw) - 1, lit(0))),
-        (a, b) => concat(a, lit(" "), b)),
-      g => g.isNotNull)
-    concat(nw, bigrams)
+    val nw = array_remove(split(coalesce(text, lit("")), " "), "")
+    val m = greatest(size(nw) - 1, lit(0))
+    concat(nw, zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
+      (a, b) => concat(a, lit(" "), b)))
   }
 
   /** `fnv1a64(word) & (buckets - 1)`: the word/gram bucket of DSIR and the
@@ -792,17 +791,14 @@ object TextOps {
   /** Adjacent (context, next) word-bucket pairs for the bigram LM:
     * words hashed to `buckets` ids (fnv1a64 & mask — power-of-two mask,
     * same engine-parity argument as [[dsirGrams]]' buckets), paired by
-    * one `zip_with` of the bucket list against its own tail. Constant
+    * one `zip_with` of two equal-length slices of the word list. Constant
     * references per ROW; the hash lambda runs once per element. */
   private[ops] def bigramBucketPairs(text: Column, buckets: Int): Column = {
-    val nw = filter(split(coalesce(text, lit("")), " "),
-      w => w =!= lit(""))
-    filter(
-      zip_with(nw, slice(nw, lit(2), greatest(size(nw) - 1, lit(0))),
-        (a, b) => when(b.isNotNull,
-          struct(hashBucket(a, buckets).as("ctx"),
-            hashBucket(b, buckets).as("nxt")))),
-      p => p.isNotNull)
+    val nw = array_remove(split(coalesce(text, lit("")), " "), "")
+    val m = greatest(size(nw) - 1, lit(0))
+    zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
+      (a, b) => struct(hashBucket(a, buckets).as("ctx"),
+        hashBucket(b, buckets).as("nxt")))
   }
 
   /** Train a CCNet-style bucketed bigram language model (Wenzek et al.,
@@ -934,7 +930,7 @@ object TextOps {
     val q = 1048576L // 2^20
     def text = coalesce(col(textCol), lit(""))
     def dlOf(c: Column) =
-      size(filter(split(c, " "), w => w =!= "")).cast("long")
+      size(array_remove(split(c, " "), "")).cast("long")
     // one row-local pass: dl + per-term tf, melted via a constant-size
     // literal array (computed BEFORE the explode, so each term costs one
     // wordOccurrences scan per row, never per output element)
@@ -1022,7 +1018,7 @@ object TextOps {
     val base = df.select(col(idCol).as("doc_id"),
       col(sourceCol).as("source"),
       stopwords.map(wordOccurrences(text, _)).reduce(_ + _).as("hits"),
-      size(filter(split(text, " "), w => w =!= "")).cast("long").as("words"))
+      size(array_remove(split(text, " "), "")).cast("long").as("words"))
       .localCheckpoint(eager = false)
     def ppm(h: String, w: String) = // floor(h·10^6/w), base-1000 split
       expr(s"($h * 1000 DIV $w) * 1000") +

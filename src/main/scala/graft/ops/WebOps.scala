@@ -35,9 +35,11 @@ object WebOps {
     // Anchored pre-fragment match: a '?' inside the fragment (http://h/p#sec?x=1)
     // must NOT fabricate a query — [^#]*? cannot cross the first '#'.
     val query = regexp_extract(url, "^[^#]*?\\?([^#]*)", 1)
-    val params = filter(split(query, "&"),
-      p => !(p.startsWith("utm_") || p === ""))
-    val sortedQuery = array_join(array_sort(params), "&")
+    // drop every utm_ param where it starts (at the front or after '&'),
+    // then the empty pieces the cut and any '&&' leave behind
+    val params = array_remove(
+      split(regexp_replace(query, "(^|&)utm_[^&]*", ""), "&"), "")
+    val sortedQuery = array_join(sort_array(params), "&")
     when(scheme === "", regexp_replace(url, "#.*$", ""))
       .otherwise(concat(scheme, lit("://"), host, path,
         when(sortedQuery === "", lit("")).otherwise(concat(lit("?"), sortedQuery))))

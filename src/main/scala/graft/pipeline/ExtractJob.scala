@@ -131,8 +131,7 @@ object ExtractJob {
     // Returned stats are aggregated from the lineage rows this invocation
     // writes (exactly-once: derived from durable committed output, so
     // retried or speculative tasks cannot over-count them).
-    val mode = if (cfg.resume) "append" else "overwrite"
-    writeLineage(spark, outDir, cfg, mode)
+    writeLineage(spark, outDir, cfg, done)
   }
 
   def readDocs(spark: SparkSession, outDir: String): DataFrame =
@@ -166,38 +165,38 @@ object ExtractJob {
     }
   }
 
+  /** Aggregates the buckets this invocation committed (every bucket but
+    * `done`, which resume skipped) from scalar columns of the output, then
+    * writes the ≤ `buckets` rows from the driver: one job, one scan. A
+    * text is empty exactly when its UTF-8 length `bytes_out` is 0. */
   private def writeLineage(
       spark: SparkSession, outDir: String, cfg: JobConfig,
-      mode: String): ExtractStats = {
+      done: Seq[Int]): ExtractStats = {
     import spark.implicits._
-    val prevDone: Set[Int] =
-      if (mode == "append") doneBuckets(spark, outDir).toSet else Set.empty
     val allDocs = readDocs(spark, outDir)
     val newDocs =
-      if (prevDone.isEmpty) allDocs
-      else allDocs.filter(!$"bucket".isin(prevDone.toSeq: _*))
-    val lineage = newDocs
+      if (done.isEmpty) allDocs else allDocs.filter(!$"bucket".isin(done: _*))
+    val rows = newDocs
       .groupBy($"bucket")
       .agg(
         count(lit(1)).as("docs"),
         sum($"total_pages").cast("long").as("pages"),
         sum($"ocr_page_count").cast("long").as("ocr_needed"),
-        sum(when(length($"extracted_text") === 0, 1L).otherwise(0L)).as("empty_extractions"),
+        sum(when($"bytes_out" === 0L, 1L).otherwise(0L)).as("empty_extractions"),
         sum($"bytes_in").as("bytes_in"),
         sum($"bytes_out").as("bytes_out"))
       .select($"bucket", lit("done").as("status"), $"docs", $"pages",
         $"ocr_needed", $"empty_extractions", $"bytes_in", $"bytes_out",
         lit(cfg.runId).as("run_id"))
       .as[LineageRow]
-      .persist()
-    try {
-      lineage.write.mode(mode).parquet(s"$outDir/lineage")
-      val rows = lineage.collect()
-      ExtractStats(
-        rows.map(_.docs).sum, rows.map(_.pages).sum,
-        rows.map(_.ocr_needed).sum, rows.map(_.empty_extractions).sum,
-        rows.map(_.bytes_in).sum, rows.map(_.bytes_out).sum)
-    } finally lineage.unpersist()
+      .collect()
+    spark.createDataset(rows.toSeq).coalesce(1).write
+      .mode(if (cfg.resume) "append" else "overwrite")
+      .parquet(s"$outDir/lineage")
+    ExtractStats(
+      rows.map(_.docs).sum, rows.map(_.pages).sum,
+      rows.map(_.ocr_needed).sum, rows.map(_.empty_extractions).sum,
+      rows.map(_.bytes_in).sum, rows.map(_.bytes_out).sum)
   }
 
   private[pipeline] def toDocResult(kp: KeyedPage, ex: DocExtract, bytesIn: Long): DocResult = {

@@ -106,7 +106,7 @@ object Summary {
   /** P5 — `_format_page_list` (_detector.py:1063-1071) as a Column expr:
     * ≤5 pages → join all; else first 3 + "... and N more". */
   def formatPageList(pages: Column): Column = {
-    val joined: Column => Column = c => concat_ws(", ", transform(c, _.cast("string")))
+    val joined: Column => Column = c => concat_ws(", ", c.cast("array<string>"))
     when(size(pages) === 0, "None")
       .when(size(pages) <= 5, joined(pages))
       .otherwise(concat(joined(slice(pages, 1, 3)), lit(", ... and "),
@@ -127,7 +127,7 @@ object Summary {
       when(size(col("empty_pages")) > 0,
         concat(lit("Empty pages (no processing needed): "),
           formatPageList(col("empty_pages")))))
-    val joined = array_join(filter(parts, _.isNotNull), " | ")
+    val joined = array_join(parts, " | ") // array_join skips null parts
     when(length(joined) === 0, "All pages have good text extraction quality.")
       .otherwise(joined)
   }

@@ -15,9 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native sketch expressions (`graft_shingle_hashes`, `graft_minhash`)
   * against plain-Scala references and against the built-in compositions
   * they replace, in both the interpreted and the generated-code path. */
-class SketchExprSpec extends AnyFunSuite {
+class SketchExprSpec extends AnyFunSuite with CodegenModes {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
+  protected lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-sketch-expr-spec")
     .config("spark.sql.shuffle.partitions", "8")
@@ -77,22 +77,6 @@ class SketchExprSpec extends AnyFunSuite {
         if (x == null) 42L else XXH64.hashLong(x, 42L)))
         .foldLeft(Long.MaxValue)(math.min)
     }
-
-  private val modes = Seq(
-    "interpreted" -> Map("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-    "generated code" -> Map("spark.sql.codegen.wholeStage" -> "true",
-      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
-
-  private def withConf[T](conf: Map[String, String])(body: => T): T = {
-    val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   private def longs(r: Row, i: Int): Option[Seq[Long]] =
     if (r.isNullAt(i)) None else Some(r.getSeq[Long](i))

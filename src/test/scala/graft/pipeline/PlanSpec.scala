@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Similarity, TextOps, WebOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -501,5 +501,152 @@ class PlanSpec extends AnyFunSuite {
       if banned.findFirstIn(line).nonEmpty
     } yield s"$f:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** Source with comments and string/char literals blanked to spaces
+    * (offsets and line breaks kept), so parentheses and names inside them
+    * cannot match. */
+  private def codeOnly(src: String): String = {
+    val out = src.toCharArray
+    def blank(from: Int, to: Int): Unit =
+      for (j <- from until math.min(to, out.length) if out(j) != '\n') out(j) = ' '
+    def after(token: String, from: Int): Int = {
+      val e = src.indexOf(token, from)
+      if (e < 0) src.length else e + token.length
+    }
+    var i = 0
+    while (i < src.length) {
+      val end =
+        if (src.startsWith("//", i)) after("\n", i) - 1
+        else if (src.startsWith("/*", i)) after("*/", i + 2)
+        else if (src.startsWith("\"\"\"", i)) after("\"\"\"", i + 3)
+        else if (src(i) == '"') {
+          var j = i + 1
+          while (j < src.length && src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
+          j + 1
+        } else if (src(i) == '\'' && i + 3 < src.length && src(i + 1) == '\\')
+          if (src(i + 2) == '\'') i + 4 else after("'", i + 2)
+        else if (src(i) == '\'' && i + 2 < src.length && src(i + 2) == '\'') i + 3
+        else i + 1
+      if (end > i + 1) blank(i, end)
+      i = end
+    }
+    new String(out)
+  }
+
+  /** Every lambda higher-order call in `code`, as the offset of its name:
+    * a `transform`/`aggregate`/`zip_with`/`filter`/… call (not a method
+    * call) with a `=>` or a `_` placeholder among its own arguments. */
+  private def lambdaCalls(code: String): Seq[Int] = {
+    val hof = ("""(?<![\w.$])(transform|aggregate|zip_with|filter|exists|forall|""" +
+      """reduce|array_sort|map_filter|map_zip_with|transform_keys|transform_values)\(""").r
+    hof.findAllMatchIn(code).map(_.start).filter { at =>
+      var j = code.indexOf('(', at) + 1
+      var depth = 1
+      var lambda = false
+      while (depth > 0 && j < code.length) {
+        code(j) match {
+          case '(' | '[' => depth += 1
+          case ')' | ']' => depth -= 1
+          case '=' if depth == 1 && code.startsWith("=>", j) => lambda = true
+          case '_' if depth == 1 && !(code(j - 1).isLetterOrDigit || code(j - 1) == '_') &&
+            !(code(j + 1).isLetterOrDigit || code(j + 1) == '_') => lambda = true
+          case _ =>
+        }
+        j += 1
+      }
+      lambda
+    }.toSeq
+  }
+
+  /** The only lambda higher-order calls left in src/main/scala, by file and
+    * site (member def, or SparkEntry query): folds and element-wise
+    * arithmetic that no Spark built-in expresses. */
+  private val lambdaAllowlist: Map[(String, String), Int] = Map(
+    ("graft/ops/Similarity.scala", "cosine") -> 4,
+    ("graft/ops/Similarity.scala", "planeBit") -> 2,
+    ("graft/ops/Similarity.scala", "ivfTopK") -> 2,
+    ("graft/ops/Similarity.scala", "trainQuantizer") -> 1,
+    ("graft/ops/Similarity.scala", "semDedup") -> 1,
+    ("graft/ops/TextOps.scala", "applyMerge") -> 1,
+    ("graft/ops/TextOps.scala", "bpeSymbolCount") -> 1,
+    ("graft/ops/TextOps.scala", "repetitionSignals") -> 2,
+    ("graft/ops/TextOps.scala", "dsirGrams") -> 1,
+    ("graft/ops/TextOps.scala", "bigramBucketPairs") -> 1,
+    ("graft/SparkEntry.scala", "q55_ann_ivf_trained") -> 1,
+    ("graft/SparkEntry.scala", "q67_semdedup") -> 1)
+
+  test("lambda higher-order calls in src/main/scala only at the allowlisted " +
+    "folds; everywhere else Spark built-ins") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 40, files.size)
+    val memberDef = """(?m)^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r
+    val query = """(?m)^\s*"(q\d+\w*)" ->""".r
+    val found = for {
+      f <- files
+      src = new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
+      code = codeOnly(src)
+      sites = (memberDef.findAllMatchIn(code) ++ query.findAllMatchIn(src))
+        .map(m => m.start -> m.group(1)).toSeq.sortBy(_._1)
+      at <- lambdaCalls(code)
+    } yield {
+      val site = sites.takeWhile(_._1 < at).lastOption.map(_._2).getOrElse("<top>")
+      val line = src.substring(0, at).count(_ == '\n') + 1
+      (root.relativize(f).toString, site, line)
+    }
+    val bySite = found.groupBy(h => (h._1, h._2)).map { case (k, v) => k -> v.size }
+    val report = found.sortBy(h => (h._1, h._3))
+      .map { case (f, site, line) => s"$f:$line ($site)" }.mkString("\n")
+    assert(bySite == lambdaAllowlist, report)
+  }
+
+  test("lineage reads only scalar columns of the output: the lineage " +
+    "scan's ReadSchema holds no extracted_text") {
+    val dir = Files.createTempDirectory("graft_plan_lineage_").toString
+    val plans = builtPlans {
+      ExtractJob.run(spark, spark.read.parquet(corpus), dir, JobConfig(buckets = 8))
+      ExtractJob.readLineage(spark, dir)
+    }
+    val schemas = plans.flatMap(_.linesIterator.filter(_.contains("ReadSchema")))
+      .filter(_.contains("bytes_out"))
+    assert(schemas.nonEmpty, plans.mkString("\n"))
+    assert(schemas.forall(!_.contains("extracted_text")), schemas.mkString("\n"))
+    assert(ExtractJob.readLineage(spark, dir).count() > 0)
+  }
+
+  test("operators converted from lambdas to built-ins plan no " +
+    "lambdafunction; the Gopher and URL projections are whole-stage codegen'd") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft_plan_builtins_").toString
+    Seq((1L, "the cat sat\nhello world", "a.example", "https://A.example:443/p?b=2&utm_x=1&a=1#f"),
+      (2L, "the cat sat\nother line and of is", "a.example", "http://b.example/q?utm_y=2"),
+      (3L, "word word word the end", "b.example", "plain"))
+      .toDF("doc_id", "text", "source", "url").write.mode("overwrite").parquet(dir)
+    val docs = spark.read.parquet(dir)
+    val pages = ExtractJob.pageStats(spark, outDir)
+    val gopher = TextOps.gopherQualitySignals(docs, "doc_id", "text")
+    val url = docs.select(WebOps.canonicalizeUrl(col("url")).as("u"))
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "gopherQualitySignals" -> (() => gopher),
+      "dropDuplicatedLines" -> (() =>
+        TextOps.dropDuplicatedLines(docs, "doc_id", "text", 2)),
+      "removeDuplicatedSpans" -> (() =>
+        Dedup.removeDuplicatedSpans(docs, "doc_id", "text", k = 2, minTokens = 2)),
+      "bm25TopK" -> (() =>
+        TextOps.bm25TopK(docs, "doc_id", "text", Seq("the", "cat"), 2)),
+      "sourceReputation" -> (() =>
+        TextOps.sourceReputation(docs, "doc_id", "text", "source")),
+      "corpusSummary" -> (() => Summary.corpusSummary(pages)),
+      "problematicPages" -> (() => Summary.problematicPages(pages)),
+      "canonicalizeUrl" -> (() => url))
+    for ((name, op) <- ops) {
+      val p = builtPlans(op()).mkString("\n")
+      assert(!p.contains("lambdafunction("), s"$name:\n${p.take(3000)}")
+    }
+    for ((name, df) <- Seq("gopherQualitySignals" -> gopher, "canonicalizeUrl" -> url))
+      assert(plan(df).startsWith("*("), s"$name:\n${plan(df).take(1500)}")
   }
 }
