@@ -114,6 +114,13 @@ object SparkEntry {
       |  FROM cls
       |)""".stripMargin
 
+  /** `embeddings` with every component quantized to floor(x·8) — ·8 is a
+    * power of two so the product is exact, and floor is unambiguous in
+    * both engines. The input of q55 and q67. */
+  private def quantizedEmbeddings(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "embeddings").select(col("vec_id"),
+      transform(col("embedding").cast("array<double>"), x => floor(x * 8)).as("iv"))
+
   /** P5 formatted list (Summary.formatPageList) of a sorted long array. */
   private def fmtList(pagesCol: Column): Column = Summary.formatPageList(pagesCol)
 
@@ -764,17 +771,14 @@ object SparkEntry {
 
     // ANN IVF with a TRAINED quantizer (2 Lloyd's iterations), fully
     // oracle-checked: the embeddings are quantized to integer components
-    // (floor(x·8) — ·8 is a power of two so the product is exact, floor is
-    // unambiguous in both engines), which makes every per-cluster partial
+    // (`quantizedEmbeddings`), which makes every per-cluster partial
     // sum EXACT regardless of summation order; each centroid is then one
     // correctly-rounded division (sum/n), so the trained centroids — and
     // every cosine computed from them via the shared sequential fold — are
     // bit-identical between Spark and the DuckDB oracle's unrolled
     // two-iteration Lloyd's SQL.
     "q55_ann_ivf_trained" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * 8)).as("iv"))
+      val e = quantizedEmbeddings(s, dir)
       val cents = Similarity.trainQuantizer(e, "vec_id", "iv",
         nlist = 4, dim = 64, iterations = 2)
       Similarity.ivfTopK(e, e.filter(col("vec_id") < 10), "vec_id", "iv",
@@ -959,9 +963,7 @@ object SparkEntry {
     // oracle-checked: centroids, assignment, screen order and every
     // pairwise cosine re-derive bit-identically in SQL.
     "q67_semdedup" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings").select(col("vec_id"),
-        transform(col("embedding").cast("array<double>"),
-          x => floor(x * 8)).as("iv"))
+      val e = quantizedEmbeddings(s, dir)
       Similarity.semDedup(e, "vec_id", "iv", threshold = 0.55,
         dim = 64, nlist = 8, iterations = 2)
         .select(col("id").as("vec_id"), col("cluster"),
@@ -2566,8 +2568,8 @@ object SparkEntry {
     // bigram list, GROUP BY (doc, bigram), then per-doc max / min-filter /
     // singleton counts. DuckDB lists are 1-indexed; range(1, len) yields
     // i = 1..len-1 so words[i] || ' ' || words[i+1] enumerates exactly the
-    // adjacent pairs the Spark zip_with builds. top_ppm is exact integer
-    // floor division in both engines.
+    // adjacent pairs the Spark bigram regexp extracts. top_ppm is exact
+    // integer floor division in both engines.
     m += "q48_repetition_signals" ->
       """WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS words FROM documents),

@@ -38,8 +38,8 @@ final class Extractor(cfg: ProbeConfig) {
       // genuine-PDF probe (PdfParse: object scan, Flate streams, Tj/TJ);
       // GFTPDF1 structured payloads keep exercising the same decision
       // functions; everything else is html. The second reader's geometric
-      // view (altTextLayer) is only computed when a strategy other than
-      // "fitz" can consult it — the performance-mode hot path pays nothing.
+      // view (altTextLayer) is only computed in accuracy mode, the one
+      // strategy that consults it — the performance-mode hot path pays nothing.
       if (PdfParse.isRealPdf(htmlBytes))
         extractPdf(PdfParse.parse(htmlBytes, needAlt = cfg.accuracyMode))
       else if (PdfPayload.isPdf(htmlBytes)) extractPdf(PdfPayload.deserialize(htmlBytes))

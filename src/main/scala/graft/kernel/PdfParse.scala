@@ -163,10 +163,10 @@ object PdfParse {
     *   (`altTextLayer`): geometric line reassembly by text-space position,
     *   including text inside Form XObjects — a genuinely different
     *   algorithm from the cursor-order primary, mirroring how
-    *   fitz-vs-pdfplumber disagree on real files (the `both`/`auto`
-    *   fallback of _detector.py:277-287 can then actually rescue pages).
+    *   fitz-vs-pdfplumber disagree on real files (accuracy mode's
+    *   longer-layer pick, _detector.py:277-296, can then rescue pages).
     *   Off by default: the performance-mode hot path ("fitz") never reads
-    *   it, so the second pass is only paid when a strategy can use it. */
+    *   it, so the second pass is only paid in accuracy mode. */
   def parse(bytes: Array[Byte], needAlt: Boolean): PdfDoc = {
     val raw = new String(bytes, StandardCharsets.ISO_8859_1) // byte-faithful
     val scanned = scanObjects(raw)

@@ -75,7 +75,6 @@ final case class ProbeConfig(
     maxTextChars: Int = 2000000) {
   /** fast defaults vs accuracy mode (_detector.py:59-68) */
   def performanceMode: Boolean = !accuracyMode
-  def textExtractionMethod: String = if (accuracyMode) "auto" else "fitz"
 }
 
 /** X1–X4 — the embedded-text-layer / image-layer probe over PDF-like
@@ -85,31 +84,20 @@ final case class ProbeConfig(
   */
 final class PdfProbe(cfg: ProbeConfig) {
 
-  /** X1 — `_extract_text_optimized` (_detector.py:250-296): strategy
-    * dispatch with fallback-on-low-yield (<20 chars) in performance mode. */
+  /** X1 — `_extract_text_optimized` (_detector.py:250-296) under the two
+    * strategies the reference's modes select (_detector.py:59-68):
+    * performance mode reads the primary ("fitz") layer only; accuracy mode
+    * ("auto") keeps the longer of the primary and the geometric
+    * ("pdfplumber") layer, the geometric one on a tie. */
   def extractText(page: PdfPage): (String, String) = {
     // length comparisons are CPython len() = CODE POINTS (the reference
     // compares len(text) at _detector.py:277-296); UTF-16 .length would
     // double-count astral chars and flip strategy decisions
-    def fitzText = Py.strip(page.textLayer)
-    def plumberText = Py.strip(page.altTextLayer.getOrElse(""))
-    cfg.textExtractionMethod match {
-      case "fitz" => (fitzText, "fitz")
-      case "pdfplumber" => (plumberText, "pdfplumber")
-      case "both" =>
-        val (f, p) = (fitzText, plumberText)
-        if (Py.len(f) > Py.len(p)) (f, "fitz") else (p, "pdfplumber")
-      case _ => // "auto"
-        val f = fitzText
-        if (cfg.performanceMode) {
-          if (Py.len(f) < 20) {
-            val p = plumberText
-            if (Py.len(p) > Py.len(f)) (p, "pdfplumber") else (f, "fitz")
-          } else (f, "fitz")
-        } else {
-          val p = plumberText
-          if (Py.len(f) > Py.len(p)) (f, "fitz") else (p, "pdfplumber")
-        }
+    val f = Py.strip(page.textLayer)
+    if (cfg.performanceMode) (f, "fitz")
+    else {
+      val p = Py.strip(page.altTextLayer.getOrElse(""))
+      if (Py.len(f) > Py.len(p)) (f, "fitz") else (p, "pdfplumber")
     }
   }
 

@@ -25,6 +25,14 @@ object Similarity {
     when(na === 0.0 || nb === 0.0, 0.0).otherwise(dot / (na * nb))
   }
 
+  /** The cosine of `v` to every centroid, in centroid order: ONE
+    * array<array<double>> literal (`typedlit`) that a `transform`
+    * iterates at runtime, so the plan stays O(1) in the centroid count.
+    * The one centroid-scoring definition of [[ivfTopK]],
+    * [[trainQuantizer]] and [[semDedup]]. */
+  private def centroidScores(v: Column, cents: Array[Array[Double]]): Column =
+    transform(typedlit(cents.map(_.toSeq).toSeq), ct => cosine(v, ct))
+
   /** Exact brute-force top-k: for each query vector, the k nearest corpus
     * vectors by cosine. `queries` must be small (it is broadcast). */
   def bruteForceTopK(
@@ -131,8 +139,6 @@ object Similarity {
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
     val cents: Array[Array[Double]] =
       centroids.getOrElse(sampleCentroids(corpus, idCol, vecCol, nlist))
-    val centsLit: Column = typedlit(cents.map(_.toSeq).toSeq)
-    def scoresFor(v: Column): Column = transform(centsLit, ct => cosine(v, ct))
 
     // the cluster id is wrapped non-null (coalesce with 0, which matches
     // no 1-based query cluster — identical join result for a null vector):
@@ -145,7 +151,7 @@ object Similarity {
     val assigned = corpus
       .select(col(idCol).as("neighbor_id"),
         col(vecCol).cast("array<double>").as("cv"))
-      .withColumn("scores", scoresFor(col("cv")))
+      .withColumn("scores", centroidScores(col("cv"), cents))
       .withColumn("cluster",
         coalesce(array_position(col("scores"), array_max(col("scores"))),
           lit(0L)))
@@ -154,13 +160,19 @@ object Similarity {
     val q = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("qv"))
-      .withColumn("scores", scoresFor(col("qv")))
+      .withColumn("scores", centroidScores(col("qv"), cents))
       .withColumn("nth", element_at(sort_array(col("scores"), asc = false),
         math.min(nprobe, cents.length)))
-      .withColumn("cluster", explode(filter(
-        sequence(lit(1L), lit(cents.length.toLong)),
-        i => element_at(col("scores"), i.cast("int")) >= col("nth"))))
-      .select(col("query_id"), col("qv"), col("cluster"))
+      // no inferable constraint on `scores` or `nth`: a plain posexplode
+      // (size(scores) > 0) or a bare `score >= nth` (isnotnull(nth)) lets
+      // the optimizer push the whole centroid scoring into the scan's
+      // Filter, where it runs a second time per row. The outer row of an
+      // empty array has a null score and fails the probe like a null.
+      .select(col("query_id"), col("qv"), col("nth"),
+        posexplode_outer(col("scores")).as(Seq("pos", "score")))
+      .filter(coalesce(col("score") >= col("nth"), lit(false)))
+      .select(col("query_id"), col("qv"),
+        (col("pos") + 1).cast("long").as("cluster"))
 
     val scored = assigned.join(broadcast(q), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -240,9 +252,8 @@ object Similarity {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var iter = 0
     while (iter < iterations) {
-      val centsLit: Column = typedlit(cents.map(_.toSeq).toSeq)
       val assigned = base
-        .withColumn("scores", transform(centsLit, ct => cosine(col("cv"), ct)))
+        .withColumn("scores", centroidScores(col("cv"), cents))
         .withColumn("cluster",
           array_position(col("scores"), array_max(col("scores"))))
         .drop("scores")
@@ -396,12 +407,11 @@ object Similarity {
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
     val cents = centroids.getOrElse(
       trainQuantizer(corpus, idCol, vecCol, nlist, dim, iterations))
-    val centsLit: Column = typedlit(cents.map(_.toSeq).toSeq)
     val assigned = corpus
       .select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<double>").as("v"))
       .filter(col("v").isNotNull && size(col("v")) === dim)
-      .withColumn("scores", transform(centsLit, ct => cosine(col("v"), ct)))
+      .withColumn("scores", centroidScores(col("v"), cents))
       .withColumn("cluster",
         array_position(col("scores"), array_max(col("scores"))))
       .withColumn("centroid_cosine", array_max(col("scores")))

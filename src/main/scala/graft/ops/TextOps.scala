@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.util.regex.{Matcher, Pattern}
+
 import scala.collection.mutable
 
 import graft.expr.KernelExpressions.{fnv1a64, ilog2q20}
@@ -123,15 +125,15 @@ object TextOps {
     * Determinism: pair counts are exact integers; the argmax tie-breaks
     * (count DESC, left ASC, right ASC — binary string order); the merge
     * application is the EXACT greedy left-to-right BPE scan
-    * (`applyMerge`: a sequential fold whose accumulator is a U+0001-
-    * joined symbol string — the separator anchors every symbol START, so
-    * a rule (o,w) can never falsely match the suffix of symbol "lo", and
-    * a merged symbol immediately participates in the next comparison,
-    * handling runs like [a,a,a,a] → [aa,aa] correctly). DuckDB
-    * reproduces the fold with `list_reduce` over the same pre-separated
-    * elements, so the whole training trace is oracle-checkable (q56
-    * unrolls the iterations in SQL). Symbols are UTF-16-unit chars
-    * (ASCII-identical to code points; the oracle corpus is ASCII). */
+    * (`applyMerge`: one anchored replace over a U+0001-joined symbol
+    * string — the separator anchors every symbol START, so a rule (o,w)
+    * can never falsely match the suffix of symbol "lo", and matches do
+    * not overlap, handling runs like [a,a,a,a] → [aa,aa] correctly).
+    * DuckDB reproduces the scan with `list_reduce` over the same
+    * pre-separated elements, so the whole training trace is
+    * oracle-checkable (q56 unrolls the iterations in SQL). Symbols are
+    * UTF-16-unit chars (ASCII-identical to code points; the oracle corpus
+    * is ASCII). */
   def bpeMerges(df: DataFrame, textCol: String, steps: Int): DataFrame = {
     val spark = df.sparkSession
     val sep = "\u0001" // never occurs in tokens
@@ -176,20 +178,28 @@ object TextOps {
   /** One greedy left-to-right BPE merge pass over a symbol array — the
     * standard (Sennrich) scan: walk symbols once; when the previous
     * retained symbol is `l` and the current is `r`, fuse them (the fused
-    * symbol then participates in the NEXT comparison, so [a,a,a,a] under
-    * (a,a) → [aa,aa]). Implemented as a sequential string fold whose
-    * accumulator joins symbols with U+0001: the separator prefix anchors
-    * each symbol's START, so `endswith(acc, sep+l)` is true iff the last
-    * whole symbol equals `l` — a rule (o,w) can never match the suffix
-    * of a longer symbol like "lo". DuckDB replicates the fold with
-    * `list_reduce` over identically pre-separated elements (q56/q57
-    * oracles). */
+    * symbol then cannot start the next pair, so [a,a,a,a] under (a,a) →
+    * [aa,aa]). Implemented as one anchored `regexp_replace` over the
+    * symbols joined with a U+0001 prefix each ([[mergeReplace]]); DuckDB
+    * replicates the scan with `list_reduce` over identically pre-separated
+    * elements (q56/q57 oracles). */
   private[ops] def applyMerge(syms: Column, l: String, r: String): Column = {
     val sep = "\u0001"
-    val folded = aggregate(syms, lit(""),
-      (acc, x) => when(endswith(acc, lit(sep + l)) && x === r, concat(acc, x))
-        .otherwise(concat(acc, lit(sep), x)))
-    array_remove(split(folded, sep), "")
+    array_remove(split(mergeReplace(concat(lit(sep), array_join(syms, sep)),
+      l, r, sep), sep), "")
+  }
+
+  /** Replace every leftmost non-overlapping `sep l sep r` whose `r` ends a
+    * symbol (`end` follows, or the string ends) by `sep lr` — the greedy
+    * merge scan over U+0001-prefixed symbols. The separator before `l`
+    * anchors a symbol START, so a rule (o,w) never matches the suffix of
+    * a symbol like "lo"; `\z`, not `$`, because `$` also matches before a
+    * final `\n` and a symbol can be `\n`. */
+  private def mergeReplace(joined: Column, l: String, r: String, end: String): Column = {
+    val sep = "\u0001"
+    regexp_replace(joined,
+      lit(sep + Pattern.quote(l) + sep + Pattern.quote(r) + s"(?=$end|\\z)"),
+      lit(Matcher.quoteReplacement(sep + l + r)))
   }
 
   /** BPE merge training with DRIVER-SIDE iterations — trace-identical to
@@ -376,28 +386,27 @@ object TextOps {
   }
 
   /** Apply-side of BPE: the number of symbols `text` tokenizes into under
-    * the given ordered merge list. Entirely row-local (one pass per
-    * token: char-split → the merge `replace` chain → count); merges never
-    * cross token boundaries because each token is segmented on its own.
-    * The merge application is `bpeMerges`' exact greedy scan
-    * (`applyMerge`), so the count is reproducible by the DuckDB oracle
-    * (q57) applying the same fold chain. */
+    * the given ordered merge list. Entirely row-local and over the whole
+    * text: a U+0001 goes before every non-space code point, each merge is
+    * one anchored replace ([[mergeReplace]], which also stops at a space,
+    * so merges never cross token boundaries), and the count is the number
+    * of U+0001 left. The merge application is `bpeMerges`' exact greedy
+    * scan (`applyMerge`), so the count is reproducible by the DuckDB
+    * oracle (q57) applying the same fold chain. */
   def bpeSymbolCount(text: Column, merges: Seq[(String, String)]): Column = {
     val sep = "\u0001"
-    aggregate(
-      array_remove(split(text, " "), ""),
-      lit(0L),
-      (acc, tok) => {
-        val syms0 = array_remove(split(tok, ""), "")
-        val merged = merges.foldLeft(syms0) { case (sy, (l, r)) =>
-          applyMerge(sy, l, r)
-        }
-        // tokens carrying the U+0001 separator cannot be segmented via
-        // the joined-string scan (training excluded them too): their
-        // symbol count is the unmerged char count
-        acc + when(tok.contains(sep), length(tok))
-          .otherwise(size(merged)).cast("long")
-      })
+    // tokens carrying the U+0001 separator cannot be segmented this way
+    // (training excluded them too): they keep their unmerged char count
+    val sepToken = s"[^ ]*$sep[^ ]*"
+    val sepChars = length(array_join(
+      regexp_extract_all(text, lit(s"($sepToken)"), lit(1)), ""))
+    val marked = regexp_replace(regexp_replace(text, lit(sepToken), lit("")),
+      lit("([^ ])"), lit(sep + "$1"))
+    val merged = merges.foldLeft(marked) { case (t, (l, r)) =>
+      mergeReplace(t, l, r, s"[$sep ]")
+    }
+    (sepChars + length(merged) - length(replace(merged, lit(sep), lit(""))))
+      .cast("long")
   }
 
   /** Gopher-style quality signals (Rae et al. 2021 §A1.1 subset that is
@@ -517,10 +526,8 @@ object TextOps {
     * per-document word-bigram statistics that flag boilerplate / template
     * spam — the fraction of bigram occurrences taken by the single most
     * frequent bigram, and how many bigrams occur exactly once. Entirely
-    * row-local (no shuffle): bigrams are built with `zip_with` over two
-    * `slice`s so the `split` is evaluated per ROW, not per element (the
-    * SCALE.md HOF re-evaluation trap), and the counts come from ONE
-    * run-length `aggregate` pass over the sorted bigram list — O(n log n)
+    * row-local (no shuffle): bigrams are [[sortedBigrams]], and the counts
+    * come from ONE run-length `aggregate` pass over them — O(n log n)
     * per document instead of an explode + per-doc groupBy shuffle, which
     * is the right shape when the signal is consumed as a per-row filter
     * at corpus scale. Ties for the top bigram go to the lexicographically
@@ -530,12 +537,8 @@ object TextOps {
     * both engines, so the DuckDB oracle matches bit-for-bit. */
   def repetitionSignals(df: DataFrame, textCol: String,
       repetitiveTopPpm: Long = 60000L): DataFrame = {
-    val words = split(col(textCol), " ")
-    val n = size(words)
-    val bigrams = zip_with(
-      slice(words, lit(1), n - 1), slice(words, lit(2), n - 1),
-      (a, b) => concat(a, lit(" "), b))
-    val sorted = array_sort(bigrams)
+    val n = size(split(col(textCol), " "))
+    val sorted = sortedBigrams(col(textCol))
     // run-length fold state: current run (prev, run) + best-so-far
     // (best, bestg) + count of runs of length exactly 1 (singles).
     val zero = struct(lit("").as("prev"), lit(0L).as("run"),
@@ -577,6 +580,15 @@ object TextOps {
         .otherwise(expr("top_count * 1000000 DIV n_bigrams")))
       .withColumn("repetitive", col("top_ppm") > repetitiveTopPpm)
   }
+
+  /** Every adjacent pair of `split(text, " ")`, empty tokens included,
+    * joined by one space and sorted. The positive lookbehind anchors each
+    * match at a token start; the negative `(?<![^ ])` would also match
+    * between the halves of a surrogate pair, because after an empty match
+    * Java steps on by one UTF-16 unit. `sort_array` is safe: no element
+    * is null. */
+  private[ops] def sortedBigrams(text: Column): Column =
+    sort_array(regexp_extract_all(text, lit("(?:^|(?<= ))(?=([^ ]* [^ ]*))"), lit(1)))
 
   /** Full reference-semantics quality metrics via the kernel (Dataset map —
     * used when byte-identical F1–F7 values are required on a text column). */
@@ -699,13 +711,14 @@ object TextOps {
     * single-space-separated text, empty tokens dropped. `nw` is
     * referenced a constant number of times PER ROW (never per element —
     * the measured >30× HOF re-inline trap applies to per-element
-    * re-evaluation only); bigrams come from one `zip_with` of two
-    * equal-length slices of the word list (words 1..n−1 and 2..n). */
+    * re-evaluation only); bigrams are every adjacent pair of non-empty
+    * words, matched in the text with runs of spaces collapsed (the
+    * lookbehind bigram pattern of [[sortedBigrams]]). */
   private[ops] def dsirGrams(text: Column): Column = {
-    val nw = array_remove(split(coalesce(text, lit("")), " "), "")
-    val m = greatest(size(nw) - 1, lit(0))
-    concat(nw, zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
-      (a, b) => concat(a, lit(" "), b)))
+    val t = coalesce(text, lit(""))
+    concat(array_remove(split(t, " "), ""),
+      regexp_extract_all(regexp_replace(t, lit(" +"), lit(" ")),
+        lit("(?:^|(?<= ))(?=([^ ]+ [^ ]+))"), lit(1)))
   }
 
   /** `fnv1a64(word) & (buckets - 1)`: the word/gram bucket of DSIR and the
@@ -788,17 +801,15 @@ object TextOps {
         sum(col("weight_q20")).as("score_q20"))
   }
 
-  /** Adjacent (context, next) word-bucket pairs for the bigram LM:
-    * words hashed to `buckets` ids (fnv1a64 & mask — power-of-two mask,
-    * same engine-parity argument as [[dsirGrams]]' buckets), paired by
-    * one `zip_with` of two equal-length slices of the word list. Constant
-    * references per ROW; the hash lambda runs once per element. */
-  private[ops] def bigramBucketPairs(text: Column, buckets: Int): Column = {
+  /** Adjacent (l, r) pairs of non-empty words for the bigram LM: two
+    * equal-length slices of the word list (words 1..n−1 and 2..n),
+    * `arrays_zip`ped. Consumers explode them and hash each side with
+    * [[hashBucket]] (power-of-two mask, same engine-parity argument as
+    * [[dsirGrams]]' buckets). */
+  private[ops] def wordPairs(text: Column): Column = {
     val nw = array_remove(split(coalesce(text, lit("")), " "), "")
     val m = greatest(size(nw) - 1, lit(0))
-    zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
-      (a, b) => struct(hashBucket(a, buckets).as("ctx"),
-        hashBucket(b, buckets).as("nxt")))
+    arrays_zip(slice(nw, lit(1), m).as("l"), slice(nw, lit(2), m).as("r"))
   }
 
   /** Train a CCNet-style bucketed bigram language model (Wenzek et al.,
@@ -820,8 +831,9 @@ object TextOps {
     require(buckets >= 2 && (buckets & (buckets - 1)) == 0,
       s"buckets must be a power of two, got $buckets")
     df.filter(col(targetCol).cast("boolean"))
-      .select(explode(bigramBucketPairs(col(textCol), buckets)).as("p"))
-      .select(col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+      .select(explode(wordPairs(col(textCol))).as("p"))
+      .select(hashBucket(col("p.l"), buckets).as("ctx"),
+        hashBucket(col("p.r"), buckets).as("nxt"))
       .groupBy(col("ctx"), col("nxt"))
       .agg(count(lit(1)).as("pair_n"))
   }
@@ -850,8 +862,9 @@ object TextOps {
     val ctxTotals = pc.groupBy(col("ctx"))
       .agg(sum(col("pair_n")).as("ctx_n"))
     df.select(col(idCol).as("doc_id"),
-        explode(bigramBucketPairs(col(textCol), buckets)).as("p"))
-      .select(col("doc_id"), col("p.ctx").as("ctx"), col("p.nxt").as("nxt"))
+        explode(wordPairs(col(textCol))).as("p"))
+      .select(col("doc_id"), hashBucket(col("p.l"), buckets).as("ctx"),
+        hashBucket(col("p.r"), buckets).as("nxt"))
       .join(broadcast(ctxTotals), Seq("ctx"), "left_outer")
       .join(broadcast(pc.select(col("ctx"), col("nxt"),
         col("pair_n"))), Seq("ctx", "nxt"), "left_outer")

@@ -67,10 +67,10 @@ class PdfProbeSpec extends AnyFunSuite {
     assert(r.pages.forall(p => p >= 1 && p <= 9))
   }
 
-  test("X1 extraction strategies: fitz / pdfplumber / both / auto") {
+  test("X1: performance mode reads fitz only, accuracy mode the longer layer") {
     val page = PdfPage(612, 792, " short ", Some(" a much longer alternate text layer here "), Vector.empty)
     assert(new PdfProbe(ProbeConfig()).extractText(page) == (("short", "fitz"))) // fast mode = fitz only
-    val auto = new PdfProbe(ProbeConfig(accuracyMode = true)) // auto → both, pick longer
+    val auto = new PdfProbe(ProbeConfig(accuracyMode = true)) // auto: pick longer
     assert(auto.extractText(page) == (("a much longer alternate text layer here", "pdfplumber")))
     val longFitz = page.copy(textLayer = "fitz text that is definitely above the twenty char low-yield bar")
     assert(auto.extractText(longFitz)._2 == "fitz")

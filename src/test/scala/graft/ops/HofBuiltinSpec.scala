@@ -2,7 +2,9 @@ package graft.ops
 
 import java.nio.file.Files
 
+import graft.SessionConf.withConf
 import graft.expr.KernelExpressions
+import graft.ops.CodegenModes.modes
 import graft.pipeline.Summary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * built-ins, against the lambda forms they replace (kept here as the
   * reference), on an edge corpus read from parquet, in both the
   * interpreted and the generated-code path. */
-class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
+class HofBuiltinSpec extends AnyFunSuite {
 
-  protected lazy val spark: SparkSession = SparkSession.builder()
+  private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-hof-builtin-spec")
     .config("spark.sql.shuffle.partitions", "8")
@@ -33,7 +35,12 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
     "a\u0001b c\u0001 \u0001d",
     "aaaa abab aa a aaa", "the the the quick brown fox the the",
     "a=1&utm_source=x&b=2", "utm_a=1&&utm_b=2&c",
-    "&utm_x&x=utm_y&UTM_z=1&xutm_=2&", "utm_", "&&", "b=2&a=1#frag?utm_q=1")
+    "&utm_x&x=utm_y&UTM_z=1&xutm_=2&", "utm_", "&&", "b=2&a=1#frag?utm_q=1",
+    "$$$ \\\\ .+.+ a$b \\Ex \\E \\Q( [y]^ ?*| $1 \\\\\\",
+    "ax\n a\n\n x\n\nx\n \n\n\n ax\nax\n",
+    "aaaaa a $$$$ the thethe 😀😀😀😀😀",
+    "\u0001 \u0001\u0001 x\u0001\u0001y the \u0001aa aa\u0001",
+    "𝔫𝔫𝔫𝔫 😀𝔫😀𝔫 𠀋𠀋 𝔫 𝔫")
 
   /** Malformed UTF-8 payloads: a bad continuation, a UTF-16 surrogate, an
     * overlong '/', a truncated tail, a lone continuation, a truncated
@@ -95,23 +102,28 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
     private def words(text: Column): Column =
       filter(split(coalesce(text, lit("")), " "), w => w =!= lit(""))
 
+    def sortedBigrams(text: Column): Column = {
+      val words = split(text, " ")
+      val n = size(words)
+      array_sort(zip_with(
+        slice(words, lit(1), n - 1), slice(words, lit(2), n - 1),
+        (a, b) => concat(a, lit(" "), b)))
+    }
+
     def dsirGrams(text: Column): Column = {
       val nw = words(text)
-      concat(nw, filter(
-        zip_with(nw, slice(nw, lit(2), greatest(size(nw) - 1, lit(0))),
-          (a, b) => concat(a, lit(" "), b)),
-        g => g.isNotNull))
+      val m = greatest(size(nw) - 1, lit(0))
+      concat(nw, zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
+        (a, b) => concat(a, lit(" "), b)))
     }
 
     def bigramBucketPairs(text: Column, buckets: Int): Column = {
       def bucket(g: Column) = KernelExpressions.fnv1a64(g)
         .bitwiseAND(lit((buckets - 1).toLong))
       val nw = words(text)
-      filter(
-        zip_with(nw, slice(nw, lit(2), greatest(size(nw) - 1, lit(0))),
-          (a, b) => when(b.isNotNull,
-            struct(bucket(a).as("ctx"), bucket(b).as("nxt")))),
-        p => p.isNotNull)
+      val m = greatest(size(nw) - 1, lit(0))
+      zip_with(slice(nw, lit(1), m), slice(nw, lit(2), m),
+        (a, b) => struct(bucket(a).as("ctx"), bucket(b).as("nxt")))
     }
 
     def canonicalizeUrl(url: Column): Column = {
@@ -166,11 +178,16 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
   }
 
   private val text = col("text")
-  private val merges = Seq(("a", "a"), ("aa", "aa"), ("t", "h"), ("th", "e"), ("😀", "😀"))
+  /** Merge rules over regex metacharacters (`$`, `\`, `.`, `+`, a `\E`
+    * symbol), `\n`-final symbols after which `$` would match where `\z`
+    * does not, l = r runs and astral symbols. */
+  private val merges = Seq(("a", "a"), ("aa", "aa"), ("t", "h"), ("th", "e"),
+    ("😀", "😀"), ("$", "$"), ("\\", "\\"), (".", "+"), ("\\", "E"),
+    ("\\E", "x"), ("x", "\n"), ("a", "x"), ("\n", "\n"), ("a", "\n"), ("𝔫", "𝔫"))
 
   for ((mode, conf) <- modes) {
     test(s"row-local sites: the built-in forms ≡ their lambda forms ($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         val syms = array_remove(split(coalesce(text, lit("")), ""), "")
         val gopher = Lambda.gopher(text).zip(TextOps.gopherSignalCols(text))
           .zip(Seq("word_count", "mean_word_len", "alpha_word_ppm"))
@@ -196,11 +213,14 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
             (s"applyMerge($l, $r)", Lambda.applyMerge(syms, l, r),
               TextOps.applyMerge(syms, l, r))
           } ++ Seq(
+          ("applyMerge chain", merges.foldLeft(syms) { case (sy, (l, r)) =>
+            Lambda.applyMerge(sy, l, r) },
+            merges.foldLeft(syms) { case (sy, (l, r)) => TextOps.applyMerge(sy, l, r) }),
           ("bpeSymbolCount", Lambda.bpeSymbolCount(text, merges),
             TextOps.bpeSymbolCount(text, merges)),
-          ("dsirGrams", Lambda.dsirGrams(text), TextOps.dsirGrams(text)),
-          ("bigramBucketPairs", Lambda.bigramBucketPairs(text, 64),
-            TextOps.bigramBucketPairs(text, 64))) ++
+          ("sortedBigrams (repetitionSignals)", Lambda.sortedBigrams(text),
+            TextOps.sortedBigrams(text)),
+          ("dsirGrams", Lambda.dsirGrams(text), TextOps.dsirGrams(text))) ++
           urls.map { case (name, u) =>
             (s"canonicalizeUrl $name", Lambda.canonicalizeUrl(u), WebOps.canonicalizeUrl(u))
           } ++ Seq(
@@ -213,7 +233,7 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
     }
 
     test(s"pageSummary: array_join skips the null parts the lambda filtered ($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         def pages(n: Column) = slice(sequence(lit(1), lit(12)), lit(1), n.cast("int"))
         val df = cases.select(col("id"),
           pages(col("id") % 9).as("scanned_pages"),
@@ -227,7 +247,7 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
 
     test(s"ordered reassembly: getField over the sorted structs ≡ the " +
       s"transform that picked the field ($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         val toks = cases.select(col("id"), posexplode(split(coalesce(text, lit("")), " ")))
         val kept = when(col("pos") % 3 =!= 1, struct(col("pos"), col("col")))
         val shapes = Seq(
@@ -251,7 +271,7 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
 
     test(s"bpeMerges pair explode: arrays_zip of two slices ≡ the " +
       s"transform over sequence(1, n - 1) ($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         val vocab = cases.select(col("id"),
           array_remove(split(coalesce(text, lit("")), ""), "").as("syms"))
         val syms = col("syms")
@@ -268,6 +288,61 @@ class HofBuiltinSpec extends AnyFunSuite with CodegenModes {
             .toSeq.sorted
         val ref = rows(lambda)
         assert(ref.nonEmpty)
+        assert(rows(now) == ref)
+      }
+    }
+
+    test(s"bigram LM pairs: the arrays_zip'd word pairs, hashed after the " +
+      s"explode, ≡ the zip_with that hashed in its lambda ($mode)") {
+      withConf(spark, conf) {
+        def bucket(g: Column) = KernelExpressions.fnv1a64(g).bitwiseAND(lit(63L))
+        def rows(df: DataFrame): Seq[Seq[Long]] =
+          df.collect().map(r => r.toSeq.map(_.toString.toLong)).toSeq.sortBy(_.mkString(","))
+        val lambda = cases.select(col("id"), posexplode(Lambda.bigramBucketPairs(text, 64)))
+          .select(col("id"), col("pos"), col("col.ctx"), col("col.nxt"))
+        val now = cases.select(col("id"), posexplode(TextOps.wordPairs(text)))
+          .select(col("id"), col("pos"), bucket(col("col.l")), bucket(col("col.r")))
+        val ref = rows(lambda)
+        assert(ref.nonEmpty)
+        assert(rows(now) == ref)
+        // the two operators that consume them
+        val labeled = cases.withColumn("y", col("id") % 2 === 0)
+        val pairs = explode(Lambda.bigramBucketPairs(text, 64)).as("p")
+        val train = TextOps.bigramLmTrain(labeled, "text", "y", buckets = 64)
+        assert(rows(train) == rows(labeled.filter(col("y")).select(pairs)
+          .groupBy(col("p.ctx"), col("p.nxt")).count()))
+        val scored = TextOps.bigramLmScores(cases, "id", "text", train, buckets = 64)
+        assert(rows(scored.select(col("doc_id"), col("n_bigrams"))) ==
+          rows(cases.select(col("id"), pairs).groupBy(col("id")).count()))
+      }
+    }
+
+    test(s"ivfTopK probe: posexplode_outer kept where score >= nth ≡ the filter " +
+      s"over sequence(1, n) ($mode)") {
+      withConf(spark, conf) {
+        val s = spark
+        import s.implicits._
+        val dir = Files.createTempDirectory("graft_hof_probe_").toString
+        Seq(
+          (1L, Seq(Some(0.5), Some(0.9), Some(0.1), Some(0.9)), 2),
+          (2L, Seq(Some(0.3), Some(0.3), Some(0.3), Some(0.3)), 1),
+          (3L, Seq(None, Some(0.2), None, Some(-0.0)), 2),
+          (4L, Seq(Some(Double.NaN), Some(0.7), Some(0.0), Some(0.7)), 2),
+          (5L, Seq(None, None, None, None), 1),
+          (6L, Seq(Some(-1.0), Some(0.0), Some(1.0), Some(-0.5)), 4))
+          .toDF("id", "scores", "nprobe").write.mode("overwrite").parquet(dir)
+        val q = spark.read.parquet(dir).withColumn("nth",
+          element_at(sort_array(col("scores"), asc = false), col("nprobe")))
+        val lambda = q.select(col("id"), explode(filter(sequence(lit(1L), lit(4L)),
+          i => element_at(col("scores"), i.cast("int")) >= col("nth"))).as("cluster"))
+        val now = q.select(col("id"), col("nth"),
+          posexplode_outer(col("scores")).as(Seq("pos", "score")))
+          .filter(coalesce(col("score") >= col("nth"), lit(false)))
+          .select(col("id"), (col("pos") + 1).cast("long").as("cluster"))
+        def rows(df: DataFrame): Seq[(Long, Long)] =
+          df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+        val ref = rows(lambda)
+        assert(ref.length > 6)
         assert(rows(now) == ref)
       }
     }

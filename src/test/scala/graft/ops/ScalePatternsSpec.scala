@@ -2,6 +2,7 @@ package graft.ops
 
 import java.nio.file.Files
 
+import graft.SessionConf.withConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,7 +17,6 @@ class ScalePatternsSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.warehouse.dir",
       Files.createTempDirectory("graft_wh_").toString)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
@@ -37,30 +37,37 @@ class ScalePatternsSpec extends AnyFunSuite {
     if (loc.exists()) rm(loc)
   }
 
-  test("bucketed join: co-located tables join without any Exchange") {
-    resetTable("bkt_left"); resetTable("bkt_right")
-    val left = spark.range(10000).select(col("id").as("k"),
-      (col("id") % 97).as("v1"))
-    val right = spark.range(10000).select(col("id").as("k"),
-      (col("id") % 31).as("v2"))
-    ScalePatterns.writeBucketed(left, "bkt_left", "k", 8)
-    ScalePatterns.writeBucketed(right, "bkt_right", "k", 8)
+  /** The bucketed-join pair checks sort-merge plans: broadcast off. */
+  private val noBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
-    val joined = ScalePatterns.bucketedJoin(spark, "bkt_left", "bkt_right", "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      "bucketed join must not shuffle:\n" + plan.take(1200))
-    assert(joined.count() == 10000)
-    // correctness spot check
-    val r = joined.filter(col("k") === 4321).collect()(0)
-    assert(r.getAs[Long]("v1") == 4321 % 97 && r.getAs[Long]("v2") == 4321 % 31)
+  test("bucketed join: co-located tables join without any Exchange") {
+    withConf(spark, noBroadcast) {
+      resetTable("bkt_left"); resetTable("bkt_right")
+      val left = spark.range(10000).select(col("id").as("k"),
+        (col("id") % 97).as("v1"))
+      val right = spark.range(10000).select(col("id").as("k"),
+        (col("id") % 31).as("v2"))
+      ScalePatterns.writeBucketed(left, "bkt_left", "k", 8)
+      ScalePatterns.writeBucketed(right, "bkt_right", "k", 8)
+
+      val joined = ScalePatterns.bucketedJoin(spark, "bkt_left", "bkt_right", "k")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        "bucketed join must not shuffle:\n" + plan.take(1200))
+      assert(joined.count() == 10000)
+      // correctness spot check
+      val r = joined.filter(col("k") === 4321).collect()(0)
+      assert(r.getAs[Long]("v1") == 4321 % 97 && r.getAs[Long]("v2") == 4321 % 31)
+    }
   }
 
   test("non-bucketed equivalent DOES shuffle (the pattern's counterfactual)") {
-    val left = spark.range(10000).select(col("id").as("k"), (col("id") % 97).as("v1"))
-    val right = spark.range(10000).select(col("id").as("k"), (col("id") % 31).as("v2"))
-    val plan = left.join(right, Seq("k")).queryExecution.executedPlan.toString
-    assert(plan.contains("Exchange"), plan.take(800))
+    withConf(spark, noBroadcast) {
+      val left = spark.range(10000).select(col("id").as("k"), (col("id") % 97).as("v1"))
+      val right = spark.range(10000).select(col("id").as("k"), (col("id") % 31).as("v2"))
+      val plan = left.join(right, Seq("k")).queryExecution.executedPlan.toString
+      assert(plan.contains("Exchange"), plan.take(800))
+    }
   }
 
   test("salted aggregation: same results as plain groupBy on skewed keys") {

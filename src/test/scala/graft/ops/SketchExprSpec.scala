@@ -3,8 +3,10 @@ package graft.ops
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import graft.SessionConf.withConf
 import graft.expr.KernelExpressions
 import graft.model.DocResult
+import graft.ops.CodegenModes.modes
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XXH64
@@ -15,9 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The native sketch expressions (`graft_shingle_hashes`, `graft_minhash`)
   * against plain-Scala references and against the built-in compositions
   * they replace, in both the interpreted and the generated-code path. */
-class SketchExprSpec extends AnyFunSuite with CodegenModes {
+class SketchExprSpec extends AnyFunSuite {
 
-  protected lazy val spark: SparkSession = SparkSession.builder()
+  private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-sketch-expr-spec")
     .config("spark.sql.shuffle.partitions", "8")
@@ -84,7 +86,7 @@ class SketchExprSpec extends AnyFunSuite with CodegenModes {
   for ((mode, conf) <- modes) {
     test(s"graft_shingle_hashes and shingleFingerprints ≡ the Scala reference " +
       s"for k ∈ $ks ($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         val sel = cases.select(
           (col("id") +: col("text") +: ks.flatMap(k => Seq(
             KernelExpressions.shingleHashes(col("text"), k),
@@ -111,7 +113,7 @@ class SketchExprSpec extends AnyFunSuite with CodegenModes {
 
     test(s"graft_minhash ≡ the Scala reference, empty → MaxValue, null → null " +
       s"($mode)") {
-      withConf(conf) {
+      withConf(spark, conf) {
         val s = spark
         import s.implicits._
         val arrays: Seq[Option[Seq[java.lang.Long]]] = Seq(

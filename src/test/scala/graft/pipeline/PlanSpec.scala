@@ -150,6 +150,10 @@ class PlanSpec extends AnyFunSuite {
     val p = plan(graft.ops.TextOps.repetitionSignals(docs, "text"))
     assert(!p.contains("Exchange"), p.take(800))
     assert(!p.contains("DeserializeToObject"), p.take(800))
+    // the run-length fold is the one lambda call left (its merge and
+    // finish lambdas): the bigrams are a regexp, and `sort_array` plans
+    // no comparator lambda
+    assert("lambdafunction\\(".r.findAllIn(p).size == 2, p.take(3000))
   }
 
   test("latest-capture dedup: exactly one shuffle, on the canonical key, " +
@@ -559,22 +563,35 @@ class PlanSpec extends AnyFunSuite {
     }.toSeq
   }
 
+  /** Calls that plan a `lambdafunction` with no lambda in the source: a
+    * one-argument `array_sort` (its default comparator) and
+    * `array_compact` (4.1 rewrites it to a lambda `filter`). */
+  private def hiddenLambdaCalls(code: String): Seq[Int] =
+    """(?<![\w.$])(array_sort|array_compact)\(""".r.findAllMatchIn(code).filter { m =>
+      var j = m.end
+      var depth = 1
+      var comma = false
+      while (depth > 0 && j < code.length) {
+        code(j) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case ',' if depth == 1 => comma = true
+          case _ =>
+        }
+        j += 1
+      }
+      m.group(1) == "array_compact" || !comma
+    }.map(_.start).toSeq
+
   /** The only lambda higher-order calls left in src/main/scala, by file and
     * site (member def, or SparkEntry query): folds and element-wise
     * arithmetic that no Spark built-in expresses. */
   private val lambdaAllowlist: Map[(String, String), Int] = Map(
     ("graft/ops/Similarity.scala", "cosine") -> 4,
     ("graft/ops/Similarity.scala", "planeBit") -> 2,
-    ("graft/ops/Similarity.scala", "ivfTopK") -> 2,
-    ("graft/ops/Similarity.scala", "trainQuantizer") -> 1,
-    ("graft/ops/Similarity.scala", "semDedup") -> 1,
-    ("graft/ops/TextOps.scala", "applyMerge") -> 1,
-    ("graft/ops/TextOps.scala", "bpeSymbolCount") -> 1,
-    ("graft/ops/TextOps.scala", "repetitionSignals") -> 2,
-    ("graft/ops/TextOps.scala", "dsirGrams") -> 1,
-    ("graft/ops/TextOps.scala", "bigramBucketPairs") -> 1,
-    ("graft/SparkEntry.scala", "q55_ann_ivf_trained") -> 1,
-    ("graft/SparkEntry.scala", "q67_semdedup") -> 1)
+    ("graft/ops/Similarity.scala", "centroidScores") -> 1,
+    ("graft/ops/TextOps.scala", "repetitionSignals") -> 1,
+    ("graft/SparkEntry.scala", "quantizedEmbeddings") -> 1)
 
   test("lambda higher-order calls in src/main/scala only at the allowlisted " +
     "folds; everywhere else Spark built-ins") {
@@ -584,22 +601,25 @@ class PlanSpec extends AnyFunSuite {
     assert(files.size > 40, files.size)
     val memberDef = """(?m)^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r
     val query = """(?m)^\s*"(q\d+\w*)" ->""".r
-    val found = for {
+    def calls(find: String => Seq[Int]): Seq[(String, String, Int)] = for {
       f <- files
       src = new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
       code = codeOnly(src)
       sites = (memberDef.findAllMatchIn(code) ++ query.findAllMatchIn(src))
         .map(m => m.start -> m.group(1)).toSeq.sortBy(_._1)
-      at <- lambdaCalls(code)
+      at <- find(code)
     } yield {
       val site = sites.takeWhile(_._1 < at).lastOption.map(_._2).getOrElse("<top>")
       val line = src.substring(0, at).count(_ == '\n') + 1
       (root.relativize(f).toString, site, line)
     }
-    val bySite = found.groupBy(h => (h._1, h._2)).map { case (k, v) => k -> v.size }
-    val report = found.sortBy(h => (h._1, h._3))
+    def report(found: Seq[(String, String, Int)]): String = found.sortBy(h => (h._1, h._3))
       .map { case (f, site, line) => s"$f:$line ($site)" }.mkString("\n")
-    assert(bySite == lambdaAllowlist, report)
+    val found = calls(lambdaCalls)
+    val bySite = found.groupBy(h => (h._1, h._2)).map { case (k, v) => k -> v.size }
+    assert(bySite == lambdaAllowlist, report(found))
+    val hidden = calls(hiddenLambdaCalls)
+    assert(hidden.isEmpty, report(hidden))
   }
 
   test("lineage reads only scalar columns of the output: the lineage " +
@@ -627,6 +647,7 @@ class PlanSpec extends AnyFunSuite {
       .toDF("doc_id", "text", "source", "url").write.mode("overwrite").parquet(dir)
     val docs = spark.read.parquet(dir)
     val pages = ExtractJob.pageStats(spark, outDir)
+    val labeled = docs.withColumn("y", col("doc_id") =!= 3L)
     val gopher = TextOps.gopherQualitySignals(docs, "doc_id", "text")
     val url = docs.select(WebOps.canonicalizeUrl(col("url")).as("u"))
     val ops: Seq[(String, () => DataFrame)] = Seq(
@@ -641,7 +662,14 @@ class PlanSpec extends AnyFunSuite {
         TextOps.sourceReputation(docs, "doc_id", "text", "source")),
       "corpusSummary" -> (() => Summary.corpusSummary(pages)),
       "problematicPages" -> (() => Summary.problematicPages(pages)),
-      "canonicalizeUrl" -> (() => url))
+      "canonicalizeUrl" -> (() => url),
+      "dsirBucketWeights" -> (() =>
+        TextOps.dsirBucketWeights(labeled, "text", "y", buckets = 64)),
+      "bigramLmTrain" -> (() => TextOps.bigramLmTrain(labeled, "text", "y", buckets = 64)),
+      "bigramLmScores" -> (() => TextOps.bigramLmScores(docs, "doc_id", "text",
+        TextOps.bigramLmTrain(labeled, "text", "y", buckets = 64), buckets = 64)),
+      "bpeSymbolCount" -> (() => docs.select(
+        TextOps.bpeSymbolCount(col("text"), Seq(("t", "h"), ("th", "e"))).as("n"))))
     for ((name, op) <- ops) {
       val p = builtPlans(op()).mkString("\n")
       assert(!p.contains("lambdafunction("), s"$name:\n${p.take(3000)}")
