@@ -74,20 +74,29 @@ object Dedup {
 
   /** Connected components over a near-duplicate PAIR table — the dedup
     * endgame: pairs become clusters and one representative (the min id)
-    * survives per cluster. Alternating large-star/small-star (Kiveris et
-    * al., "Connected Components in MapReduce and Beyond", SoCC'14 —
-    * public): each round is two keyed shuffles (a map-side-combining
-    * per-vertex `min` aggregate + an equi-join re-emitting edges toward
-    * that min), and the edge set converges to a star forest rooted at each
+    * survives per cluster.
+    *
+    * Two steps. First the canonical edge set is CONTRACTED per partition
+    * ([[contractPartition]]: an in-memory union-find that rewrites the
+    * partition's edges as the star forest of its own components, inside
+    * the stage that builds the edge checkpoint — no extra job). When that
+    * already leaves a global star forest — every graph whose components
+    * each fit one partition, e.g. any graph AQE coalesces into one — the
+    * call converges in 0 rounds. Otherwise the cross-partition leftovers
+    * go through alternating large-star/small-star rounds (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14 — public):
+    * each round is two keyed shuffles (a map-side-combining per-vertex
+    * `min` aggregate + an equi-join re-emitting edges toward that min),
+    * and the edge set converges to a star forest rooted at each
     * component's minimum id in O(log diameter) rounds — a diameter-10
-    * chain converges in ≤4 rounds where plain min-label propagation needs
-    * 10 (OpsSpec pins this). Dense LSH near-dup clusters still converge
-    * in 2–3 rounds. `localCheckpoint` cuts lineage each round so the plan
-    * stays constant-size across iterations; convergence is checked with
-    * scalar counts (never a data collect). If `maxIter` rounds pass
-    * without a fixpoint (diameter > 2^maxIter — astronomically large pair
-    * graphs only) the call THROWS rather than silently returning labels
-    * that would leak duplicates through `dropNearDuplicates`.
+    * chain spread over 16 partitions converges in ≤4 rounds where plain
+    * min-label propagation needs 10 (OpsSpec pins this). `localCheckpoint`
+    * cuts lineage each round so the plan stays constant-size across
+    * iterations; convergence is checked with scalar counts (never a data
+    * collect). If `maxIter` rounds pass without a fixpoint (diameter >
+    * 2^maxIter — astronomically large pair graphs only) the call THROWS
+    * rather than silently returning labels that would leak duplicates
+    * through `dropNearDuplicates`.
     *
     * Returns (id, component): every vertex of the pair graph with the min
     * reachable id as its component label — deterministic regardless of
@@ -98,8 +107,8 @@ object Dedup {
     connectedComponentsWithRounds(pairs, aCol, bCol, maxIter)._1
 
   /** `connectedComponents` plus the number of large+small-star rounds it
-    * took to converge — exposed so tests can pin the O(log diameter)
-    * round count. */
+    * took to converge (0 when the contraction alone left a star forest) —
+    * exposed so tests can pin the round count. */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): (DataFrame, Int) = {
@@ -120,53 +129,126 @@ object Dedup {
     val verts = dirE0.select(col("src").as("id"))
       .union(dirE0.select(col("dst").as("id")))
       .distinct()
-    // canonical larger→smaller direction, self-loops dropped
-    var edges = dirE0
-      .filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .distinct().localCheckpoint(eager = false)
+    val contracted = contractedEdges(dirE0).localCheckpoint(eager = false)
+    // a contraction that ran as ONE task saw every edge, so its output is
+    // already the star forest: no check job
+    val (forest, rounds) =
+      if (contracted.rdd.getNumPartitions <= 1) (contracted, 0)
+      else starForest(contracted, maxIter)
+    // converged star forest: every non-root points at its component root
+    val labels = verts
+      .join(forest.select(col("src").as("id"), col("dst").as("component")),
+        Seq("id"), "left")
+      .select(col("id"),
+        coalesce(col("component"), col("id")).as("component"))
+    (labels, rounds)
+  }
 
+  /** Large/small-star rounds over a canonical (src > dst, no self-loop)
+    * edge set until it is a star forest rooted at each component's
+    * minimum; returns the forest and the number of rounds run. Duplicate
+    * edges are allowed (they fail the check and the rounds drop them).
+    * The fixpoint is detected STRUCTURALLY (one edge per src, no src is
+    * another edge's dst), first on the input itself (an empty set passes),
+    * then on each round's own output, so convergence costs no extra
+    * confirmation round. */
+  private[graft] def starForest(edges0: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    var edges = edges0
     var iter = 0
-    var done = edges.isEmpty
+    var done = starViolations(edges).isEmpty
     while (!done && iter < maxIter) {
       edges = smallStar(largeStar(edges)).localCheckpoint(eager = false)
       iter += 1
-      // the star fixpoint is detected STRUCTURALLY on the round's own
-      // output (a star forest: one edge per src, no src is another edge's
-      // dst), so convergence costs no extra confirmation round
-      done = isStarForest(edges)
+      done = starViolations(edges).isEmpty
     }
     if (!done)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter star rounds — " +
           "labels would be incomplete and dropNearDuplicates would leak " +
           "duplicates; raise maxIter")
-    // converged star forest: every non-root points at its component root
-    val labels = verts
-      .join(edges.select(col("src").as("id"), col("dst").as("component")),
-        Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
-    (labels, iter)
+    (edges, iter)
+  }
+
+  /** The canonical edge set of a (src, dst) pair table — larger→smaller
+    * direction, self-loops dropped, distinct — with every partition of the
+    * distinct's output contracted by [[contractPartition]]. The union of
+    * the per-partition star forests has exactly the components of the
+    * input, so labels are unchanged; an edge set whose components span
+    * partitions (or a vertex contracted in two partitions, which then
+    * carries two edges) is not a star forest and goes through the star
+    * rounds. */
+  private[graft] def contractedEdges(dirE0: DataFrame): DataFrame = {
+    val spark = dirE0.sparkSession
+    import spark.implicits._
+    dirE0
+      .filter(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("src"),
+        least(col("src"), col("dst")).as("dst"))
+      .distinct()
+      .as[(Long, Long)]
+      .mapPartitions(contractPartition)
+      .toDF("src", "dst")
+  }
+
+  /** Union-find over one partition's (src, dst) edges: emits (v, the min
+    * id of v's component within the partition) for every vertex that is
+    * not that min, i.e. the partition's star forest in canonical
+    * (src > dst) form. Vertex ids are sorted and deduplicated into a
+    * `long[]` and addressed by binary search; parents are `int[]` indexes.
+    * Index order is id order, so linking the larger root under the
+    * smaller keeps every root its component's minimum. Memory is linear in
+    * the partition's edge count (SCALE.md gives the bytes per edge). */
+  private[graft] def contractPartition(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var ends = new Array[Long](64) // src, dst interleaved
+    var n = 0
+    while (it.hasNext) {
+      val (s, d) = it.next()
+      if (n + 2 > ends.length) ends = java.util.Arrays.copyOf(ends, 2 * ends.length)
+      ends(n) = s
+      ends(n + 1) = d
+      n += 2
+    }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    java.util.Arrays.sort(ids)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (m == 0 || ids(i) != ids(m - 1)) { ids(m) = ids(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.range(0, m)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < n) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, m, ends(i)))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, m, ends(i + 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    Iterator.range(0, m).map(v => v -> find(v))
+      .collect { case (v, r) if r != v => (ids(v), ids(r)) }
   }
 
   /** A canonical (src > dst) edge set is the large/small-star fixpoint iff
     * it is a star forest rooted at each component's minimum: every src
-    * carries exactly one edge, and no src is another edge's dst. ONE
-    * vertex-keyed aggregate job checks both (per vertex, count its src and
-    * dst appearances; a violation is a vertex with 2+ src edges or with
-    * both roles) — round 7 folded the previous two convergence jobs (a
-    * grouped count plus a distinct+distinct intersect) into this single
-    * map-side-combining pass, saving two shuffles plus a job per star
-    * round on every components consumer. Never a data collect. */
-  private def isStarForest(edges: DataFrame): Boolean =
+    * carries exactly one edge, and no src is another edge's dst. This
+    * returns the vertices that break it — per vertex, its src and dst
+    * appearance counts, kept where it has 2+ src edges or both roles — so
+    * `starViolations(edges).isEmpty` is the convergence check: ONE
+    * vertex-keyed map-side-combining aggregate job (round 7 folded the
+    * previous grouped count plus distinct+distinct intersect into it).
+    * Never a data collect. */
+  private[graft] def starViolations(edges: DataFrame): DataFrame =
     edges.select(col("src").as("v"), lit(1L).as("s"), lit(0L).as("d"))
       .union(edges.select(col("dst").as("v"), lit(0L).as("s"), lit(1L).as("d")))
       .groupBy(col("v"))
       .agg(sum(col("s")).as("ns"), sum(col("d")).as("nd"))
       .filter(col("ns") > 1L || (col("ns") > 0L && col("nd") > 0L))
-      .isEmpty
 
   /** Large-star round (Kiveris et al. §3): for every vertex u, connect each
     * STRICTLY LARGER neighbor v to m = min({u} ∪ N(u)). One symmetrized

@@ -308,9 +308,12 @@ object CurateJob {
         keepers.withColumn(textCol,
           TextOps.scrubPii(coalesce(col(textCol), lit(""))))
       else keepers
-    scrubbed
-      .withColumn("bucket",
-        pmod(xxhash64(col("doc_id")), lit(cfg.buckets)).cast("int"))
+    // placed on (bucket, salt) like ExtractJob's sink, so each bucket is
+    // written by one task instead of by every task that holds a keeper
+    ExtractJob.placeByBucket(
+      scrubbed.withColumn("bucket",
+        pmod(xxhash64(col("doc_id")), lit(cfg.buckets)).cast("int")),
+      col("doc_id"), cfg.buckets, tasks = 0)
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/curated")
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.kernel.{DocExtract, Extractor, ProbeConfig}
 import graft.model.{DocResult, LineageRow, Page, PageStat}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Counters summed from the lineage rows a run commits (A11 / north rule). */
@@ -103,17 +103,8 @@ object ExtractJob {
     val results = transform(spark, input, cfg, done)
 
     // -- the one explicit shuffle: bucket + salt, post-kernel (D3/D4) -------
-    // The writer count follows the cluster; the salt follows the writers:
-    // with more writers than buckets each bucket splits ⌈tasks/buckets⌉
-    // ways, otherwise not at all. Every (bucket, salt) key lands in exactly
-    // one task, so each key is one file and the sink commits at most
-    // buckets × salts files. The shuffle payload is extracted output,
-    // never raw html.
-    val nTasks =
-      if (cfg.tasks > 0) cfg.tasks else spark.sparkContext.defaultParallelism * 2
-    val salts = math.max(1, (nTasks + cfg.buckets - 1) / cfg.buckets)
-    val placed = results.repartition(nTasks, $"bucket",
-      pmod(xxhash64($"url", lit(7)), lit(salts)))
+    // The shuffle payload is extracted output, never raw html.
+    val placed = placeByBucket(results, $"url", cfg.buckets, cfg.tasks)
 
     // -- sink: partitioned (bucketed-by-url-hash) parquet -------------------
     // Resume writes with DYNAMIC partition overwrite, not append: if a
@@ -132,6 +123,22 @@ object ExtractJob {
     // writes (exactly-once: derived from durable committed output, so
     // retried or speculative tasks cannot over-count them).
     writeLineage(spark, outDir, cfg, done)
+  }
+
+  /** Places rows for a `partitionBy("bucket")` sink: one shuffle keyed on
+    * (bucket, salt), the salt a hash of `saltKey`. The writer count follows
+    * the cluster (`tasks`, or 2× default parallelism when 0); the salt
+    * follows the writers: with more writers than buckets each bucket
+    * splits ⌈tasks/buckets⌉ ways, otherwise not at all. Every (bucket,
+    * salt) key lands in exactly one task, so each key is one file and the
+    * sink commits at most buckets × salts files — not input tasks ×
+    * buckets. */
+  private[pipeline] def placeByBucket[T](ds: Dataset[T], saltKey: Column,
+      buckets: Int, tasks: Int): Dataset[T] = {
+    val nTasks =
+      if (tasks > 0) tasks else ds.sparkSession.sparkContext.defaultParallelism * 2
+    val salts = math.max(1, (nTasks + buckets - 1) / buckets)
+    ds.repartition(nTasks, col("bucket"), pmod(xxhash64(saltKey, lit(7)), lit(salts)))
   }
 
   def readDocs(spark: SparkSession, outDir: String): DataFrame =

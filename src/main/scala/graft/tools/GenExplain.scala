@@ -126,11 +126,20 @@ object GenExplain {
       spark, "/root/testdata/sf0.001")))
     sb.append("\n```\n\n")
 
-    sb.append("## 12. Connected components star round (round 4: per-vertex\n")
-    sb.append("map-side-combining min + equi-join re-emit, shuffles keyed on the\n")
-    sb.append("vertex — one round of the O(log diameter) loop)\n\n```\n")
+    sb.append("## 12. Connected components: per-partition contraction (the\n")
+    sb.append("canonical distinct edges, then one MapPartitions union-find in the\n")
+    sb.append("same stage — no extra Exchange), the star-forest check before round\n")
+    sb.append("1 (one vertex-keyed aggregate with a partial phase), and a star\n")
+    sb.append("round (round 4: per-vertex map-side-combining min + equi-join\n")
+    sb.append("re-emit, shuffles keyed on the vertex — one round of the\n")
+    sb.append("O(log diameter) loop)\n\n```\n")
     import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
+    sb.append(fmt(graft.ops.Dedup.contractedEdges(pairs)))
+    sb.append("\n```\n\n```\n")
     val edges = Seq((2L, 1L), (3L, 2L), (11L, 10L)).toDF("src", "dst")
+    sb.append(fmt(graft.ops.Dedup.starViolations(edges)))
+    sb.append("\n```\n\n```\n")
     sb.append(fmt(graft.ops.Dedup.largeStar(edges)))
     sb.append("\n```\n\n")
 

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SessionConf
 import graft.kernel.Hashing
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -350,6 +351,13 @@ class OpsSpec extends AnyFunSuite {
     // whose generated projection code overflowed the 64KB method limit.
   }
 
+  /** Shuffles into 16 partitions that AQE may not coalesce: the edge
+    * contraction then sees only part of each component, and the star
+    * rounds run. */
+  private val sixteenPartitions = Map(
+    "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> "16")
+
   test("connected components: small-star/large-star finds the exact " +
     "clusters, incl. a diameter-10 chain in O(log diameter) rounds") {
     val edges = Seq(
@@ -358,17 +366,30 @@ class OpsSpec extends AnyFunSuite {
       (20L, 21L), (21L, 22L), (22L, 23L), (20L, 23L) // cycle → comp 20
     ) ++ (100L until 110L).map(i => (i, i + 1)) // chain of diameter 10
     val pairs = edges.toDF("id_a", "id_b")
+    def checkLabels(comp: Map[Long, Long]): Unit = {
+      assert(comp(1L) == 1L && comp(2L) == 1L && comp(3L) == 1L)
+      assert(comp(10L) == 10L && comp(11L) == 10L)
+      assert((20L to 23L).forall(comp(_) == 20L))
+      assert((100L to 110L).forall(comp(_) == 100L), s"chain: $comp")
+      assert(comp.size == 3 + 2 + 4 + 11)
+    }
     val (compDf, rounds) =
       Dedup.connectedComponentsWithRounds(pairs, "id_a", "id_b")
     // min-label propagation needed diameter ≈ 10 rounds on this chain;
     // star rounds must do it in ≤ 4 (log₂ 10 ≈ 3.3, +1 fixpoint check)
     assert(rounds <= 4, s"star convergence took $rounds rounds")
     val comp = compDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp(1L) == 1L && comp(2L) == 1L && comp(3L) == 1L)
-    assert(comp(10L) == 10L && comp(11L) == 10L)
-    assert((20L to 23L).forall(comp(_) == 20L))
-    assert((100L to 110L).forall(comp(_) == 100L), s"chain: $comp")
-    assert(comp.size == 3 + 2 + 4 + 11)
+    checkLabels(comp)
+    // the same chain spread over 16 partitions: the per-partition
+    // contraction leaves cross-partition edges, so the star rounds run
+    // (and stay within the O(log diameter) bound)
+    SessionConf.withConf(spark, sixteenPartitions) {
+      val (spreadDf, spreadRounds) =
+        Dedup.connectedComponentsWithRounds(pairs, "id_a", "id_b")
+      assert(spreadRounds >= 1 && spreadRounds <= 4,
+        s"16 partitions: $spreadRounds rounds")
+      checkLabels(spreadDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
     // a vertex appearing ONLY in a self-pair still gets a label
     val selfOnly = Dedup.connectedComponents(
       Seq((5L, 5L), (1L, 2L)).toDF("id_a", "id_b"), "id_a", "id_b")
@@ -392,13 +413,13 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connected components convergence check (r7 single-pass form): an " +
-    "already-star input converges in one round; a non-forest input (a " +
+    "already-star input converges in zero rounds; a non-forest input (a " +
     "vertex in both roles) is never accepted as a false fixpoint") {
     // star forest already: {1,2,3} rooted at 1, {10,11} rooted at 10
     val star = Seq((1L, 2L), (1L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val (labels1, rounds1) =
       Dedup.connectedComponentsWithRounds(star, "id_a", "id_b")
-    assert(rounds1 == 1, s"star input took $rounds1 rounds")
+    assert(rounds1 == 0, s"star input took $rounds1 rounds")
     assert(labels1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
     // chain 1-2-3 arrives canonical as (2,1),(3,2) — vertex 2 is both a
@@ -409,6 +430,76 @@ class OpsSpec extends AnyFunSuite {
     val labels2 = Dedup.connectedComponents(chain, "id_a", "id_b")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels2 == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), labels2.toString)
+  }
+
+  test("connected components equal a plain union-find on seeded random " +
+    "graphs (chains, cliques, cycles, trees, self-pairs, both directions) " +
+    "in one partition, eight, and sixteen uncoalesced") {
+    def graph(seed: Long): Seq[(Long, Long)] = {
+      val rng = new scala.util.Random(seed)
+      val ids = rng.shuffle((1000L until 1400L).toVector).iterator
+      val comps = (0 until 14).flatMap { _ =>
+        val vs = Vector.fill(2 + rng.nextInt(7))(ids.next())
+        val n = vs.size
+        rng.nextInt(4) match {
+          case 0 => (1 until n).map(i => (vs(i - 1), vs(i))) // chain
+          case 1 => for (i <- 0 until n; j <- i + 1 until n) yield (vs(i), vs(j))
+          case 2 => (1 until n).map(i => (vs(i - 1), vs(i))) :+ (vs(n - 1), vs(0))
+          case _ => (1 until n).map(i => (vs(rng.nextInt(i)), vs(i))) // tree
+        }
+      }
+      val flipped = comps.map(e => if (rng.nextBoolean()) e.swap else e)
+      val both = flipped.take(6).map(_.swap) // pairs given in both directions
+      val selfs = (Seq.fill(3)(ids.next()) :+ flipped.head._1).map(v => (v, v))
+      // the cross-partition duplicate shape: (5,1) and (5,3),(3,1)
+      rng.shuffle(flipped ++ both ++ selfs ++ Seq((5L, 1L), (5L, 3L), (3L, 1L)))
+    }
+    def labels(df: org.apache.spark.sql.DataFrame): (Map[Long, Long], Int) = {
+      val (l, rounds) = Dedup.connectedComponentsWithRounds(df, "id_a", "id_b")
+      (l.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+    }
+    for (seed <- 1L to 3L) {
+      val edges = graph(seed)
+      val want = graft.UnionFind.labels(edges)
+      val pairs = edges.toDF("id_a", "id_b")
+      val (one, oneRounds) = labels(pairs.coalesce(1))
+      assert(one == want, s"seed $seed, coalesce(1)")
+      assert(oneRounds == 0, s"seed $seed: one partition took $oneRounds rounds")
+      assert(labels(pairs.repartition(8))._1 == want, s"seed $seed, repartition(8)")
+      SessionConf.withConf(spark, sixteenPartitions) {
+        assert(labels(pairs)._1 == want, s"seed $seed, 16 partitions")
+      }
+    }
+    // components that are single edges are star forests however they are
+    // spread: the check passes on the multi-partition contracted set
+    SessionConf.withConf(spark, sixteenPartitions) {
+      val isolated = (0L until 40L).map(i => (2 * i, 2 * i + 1))
+      val (got, rounds) = labels(isolated.toDF("id_a", "id_b"))
+      assert(got == graft.UnionFind.labels(isolated))
+      assert(rounds == 0, s"isolated pairs took $rounds rounds")
+    }
+  }
+
+  test("per-partition contraction: each partition becomes the star forest " +
+    "of its own components; a vertex contracted in two partitions fails " +
+    "the check and the star rounds fix it") {
+    val p1 = Dedup.contractPartition(Iterator((5L, 1L))).toSeq
+    val p2 = Dedup.contractPartition(Iterator((5L, 3L), (3L, 1L))).toSeq
+    assert(p1 == Seq((5L, 1L)))
+    assert(p2.toSet == Set((3L, 1L), (5L, 1L)) && p2.size == 2)
+    assert(Dedup.contractPartition(Iterator.empty).isEmpty)
+    // a clique and a chain in one partition: one edge per non-min vertex
+    val clique = for (a <- 10L to 13L; b <- 10L to 13L if a > b) yield (a, b)
+    val chain = (21L to 29L).map(v => (v, v - 1))
+    assert(Dedup.contractPartition((clique ++ chain).iterator).toSet ==
+      (11L to 13L).map(_ -> 10L).toSet ++ (21L to 29L).map(_ -> 20L).toSet)
+    // the union of the two partitions' output carries (5,1) twice
+    val contracted = (p1 ++ p2).toDF("src", "dst")
+    assert(!Dedup.starViolations(contracted).isEmpty)
+    val (forest, rounds) = Dedup.starForest(contracted, maxIter = 25)
+    assert(rounds >= 1, s"$rounds rounds")
+    assert(forest.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet ==
+      Set(5L -> 1L, 3L -> 1L))
   }
 
   test("url canonicalization: scheme/host case, default ports, utm strip, " +

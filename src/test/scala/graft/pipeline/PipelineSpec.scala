@@ -427,6 +427,77 @@ class PipelineSpec extends AnyFunSuite {
     assert(curated.length == 2)
   }
 
+  test("CurateJob near_dup verdicts equal a plain union-find over the " +
+    "minhash near-dup pairs: planted exact copies, a near chain A~B~C " +
+    "(A not near C) and a 4-doc template clique") {
+    import spark.implicits._
+    // distinct tokens, so 3-shingle Jaccard is the overlap of the windows
+    def window(from: Int, until: Int): String =
+      (from until until).map(i => s"t$i the").mkString(" ")
+    def prose(seed: Int): String =
+      (0 until 60).map(i =>
+        s"n${seed * 619 + 2 * i} the n${seed * 619 + 2 * i + 1}").mkString(" ")
+    val template = (0 until 100).map(i => s"tpl$i").mkString(" ")
+    // at threshold 0.7: A ⊂ B and C ⊂ B with Jaccard ≈ 0.84 each, while
+    // Jaccard(A, C) ≈ 0.69 — A is near C only through B
+    val a = window(0, 110)
+    val b = window(0, 130)
+    val c = window(20, 130)
+    val docs = Seq(
+      (5L, c), // exact copy of C with a SMALLER id: it leads the chain
+      (10L, a), (11L, b), (12L, c),
+      (13L, b), // exact copy of B
+      (20L, template + " alpha"), (21L, template + " beta"),
+      (22L, template + " gamma"), (23L, template + " delta"),
+      (24L, template + " gamma"), // exact copy of a clique member
+      (30L, prose(3)), (31L, prose(3)), // exact pair, no near neighbours
+      (40L, prose(4)), (41L, prose(5))
+    ).map { case (id, t) => (id, t, "en") }.toDF("doc_id", "text", "lang")
+    val cfg = CurateConfig(nearDupThreshold = 0.7)
+    val pairs = graft.ops.Dedup.minhashNearDups(docs, "doc_id", "text",
+        shingleK = cfg.shingleK, numHashes = cfg.numHashes,
+        numBands = cfg.numBands, threshold = cfg.nearDupThreshold)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val nearLosers = graft.UnionFind.labels(pairs).collect {
+      case (v, root) if v != root => v }.toSet
+    val exactLosers = docs.collect().groupBy(_.getString(1)).values
+      .flatMap(rows => rows.map(_.getLong(0)).sorted.drop(1)).toSet
+    val want = nearLosers -- exactLosers
+    // the planted structure is really there: the chain joins A, B, C (and
+    // their copies) through B only, the clique is one component
+    assert(!pairs.exists(p => Set(p._1, p._2) == Set(10L, 12L)), pairs.toSeq)
+    assert(want == Set(10L, 11L, 21L, 22L, 23L), want)
+
+    val got = CurateJob.verdicts(docs, "doc_id", "text", "lang", cfg)
+      .filter(col("verdict") === "near_dup")
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(got == want, s"verdicts=$got union-find=$want")
+  }
+
+  test("CurateJob curated sink: keepers placed on (bucket, salt), so each " +
+    "bucket directory holds one file, with the keeper rows unchanged") {
+    import spark.implicits._
+    def prose(seed: Int): String =
+      (0 until 60).map(i =>
+        s"k${seed * 557 + 2 * i} the k${seed * 557 + 2 * i + 1}").mkString(" ")
+    val rows = (1L to 120L).map(i => (i, prose(i.toInt), "en"))
+    val docs = rows.toDF("doc_id", "text", "lang").repartition(6)
+    val out = Files.createTempDirectory("graft_curate_sink_").toString
+    val stats = CurateJob.run(spark, docs, "doc_id", "text", "lang", out,
+      CurateConfig(buckets = 16, scrubPii = false))
+    assert(stats.kept == 120L, stats.toString)
+    val files = new java.io.File(s"$out/curated").listFiles()
+      .filter(_.getName.startsWith("bucket="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
+      .toMap
+    assert(files.size == 16, files)
+    assert(files.values.forall(_ == 1), files)
+    val curated = spark.read.parquet(s"$out/curated")
+      .select("doc_id", "text", "lang").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+    assert(curated.sortBy(_._1).toSeq == rows)
+  }
+
   test("CurateJob opt-in stages: line-level dedup strips corpus " +
     "boilerplate from keepers (and a boilerplate-only doc dies too_short " +
     "AFTER stripping); Gopher thresholds add the gopher_filter verdict") {
