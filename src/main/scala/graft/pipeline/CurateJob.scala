@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.ops.{Dedup, TextOps}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Knobs of the curation funnel. Defaults mirror the q50 filter funnel and
@@ -69,8 +69,8 @@ final case class CurateConfig(
   def rewritesText: Boolean = lineDedupMinDocs > 0 || spanRemoval
 }
 
-/** Per-reason document counts of a curation run, aggregated from the
-  * committed verdict table (exactly-once, like ExtractJob's lineage). */
+/** Per-reason document counts of a curation run, observed on the verdict
+  * table's write (exactly-once, like ExtractJob's lineage: see [[CurateJob.run]]). */
 final case class CurateStats(input: Long, kept: Long, drops: Map[String, Long])
 
 /** The training-data CURATION pipeline — what a user runs over extraction
@@ -156,6 +156,10 @@ object CurateJob {
       .when(col("repetitive"), "repetitive")
       .otherwise("kept")
   }
+
+  /** Every verdict [[verdictsWithHash]] can assign. */
+  private val verdictNames = Seq("null_id", "exact_dup", "near_dup", "too_short",
+    "lang_filter", "low_quality", "gopher_filter", "repetitive", "kept")
 
   /** Per-document verdicts: (doc_id key, verdict) for every input row. */
   def verdicts(docs: DataFrame, idCol: String, textCol: String,
@@ -272,13 +276,20 @@ object CurateJob {
 
   /** Run the funnel and write `outDir/curated` (bucketed by id hash,
     * partitioned — keepers only, PII-scrubbed) plus `outDir/verdicts`
-    * (every doc). Stats are aggregated from the COMMITTED verdict table,
-    * not accumulators. */
+    * (every doc). Stats are counted by observed metrics on the verdict
+    * write: the observe sits directly under the write, in its result
+    * stage, where DAGScheduler merges each partition's accumulator updates
+    * once and OutputCommitCoordinator commits one attempt per partition —
+    * so the counts are exactly those of the committed verdict table,
+    * without a job that reads it back. */
   def run(spark: SparkSession, docs: DataFrame, idCol: String,
       textCol: String, langCol: String, outDir: String,
       cfg: CurateConfig = CurateConfig()): CurateStats = {
-    val v = verdictsWithHash(docs, idCol, textCol, langCol, cfg)
-    v.write.mode("overwrite").parquet(s"$outDir/verdicts")
+    val obs = Observation("verdicts")
+    verdictsWithHash(docs, idCol, textCol, langCol, cfg)
+      .observe(obs, count(lit(1)).as("input"),
+        verdictNames.map(v => count_if(col("verdict") === v).as(v)): _*)
+      .write.mode("overwrite").parquet(s"$outDir/verdicts")
     val committed = spark.read.parquet(s"$outDir/verdicts")
 
     // keepers retain EVERY original column (url, spans, …) plus the
@@ -317,10 +328,11 @@ object CurateJob {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/curated")
 
-    val counts = committed.groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val observed = obs.get
+    val counts = verdictNames.map(v => v -> observed(v).asInstanceOf[Long])
+      .filter(_._2 > 0).toMap
     CurateStats(
-      input = counts.values.sum,
+      input = observed("input").asInstanceOf[Long],
       kept = counts.getOrElse("kept", 0L),
       drops = counts - "kept")
   }

@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.kernel.{DocExtract, Extractor, ProbeConfig}
 import graft.model.{DocResult, LineageRow, Page, PageStat}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Counters summed from the lineage rows a run commits (A11 / north rule). */
@@ -49,9 +51,10 @@ final case class KeyedPage(
   * lineage rows (A11).
   *
   * Exactly ONE shuffle on the hot path: the explicit repartition. Lineage is
-  * computed by re-reading cheap scalar columns of the freshly written output
-  * (columnar scan; never re-reads html), so a "done" lineage row implies the
-  * bucket's data is durable — that ordering is what makes resume safe.
+  * observed inside the sink's own write job (`Dataset.observe` above the
+  * repartition — no re-read of the output) and written only after the docs
+  * commit, so a "done" lineage row implies the bucket's data is durable —
+  * that ordering is what makes resume safe.
   */
 object ExtractJob {
 
@@ -107,22 +110,27 @@ object ExtractJob {
     val placed = placeByBucket(results, $"url", cfg.buckets, cfg.tasks)
 
     // -- sink: partitioned (bucketed-by-url-hash) parquet -------------------
+    // The lineage counters ride the write as observed metrics. The observe
+    // sits above the (bucket, salt) Exchange, in the write's result stage:
+    // DAGScheduler merges a result task's accumulator updates once per
+    // partition and OutputCommitCoordinator commits one attempt per
+    // partition, so the counts are exact for the committed files even when
+    // tasks are retried or speculated.
+    val obs = Observation("lineage")
+    val writer = placed.observe(obs, bucketCounters(col("bucket"),
+        col("total_pages").cast("long"), col("ocr_page_count").cast("long"),
+        col("bytes_in"), col("bytes_out")).as("buckets"))
+      .write.mode("overwrite").partitionBy("bucket")
     // Resume writes with DYNAMIC partition overwrite, not append: if a
     // previous run died in the docs-committed/lineage-missing window, the
     // re-extraction of those buckets REPLACES their partitions instead of
     // appending duplicates — resume is idempotent across any crash point.
-    if (cfg.resume)
-      placed.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$outDir/docs")
-    else
-      placed.write.mode("overwrite").partitionBy("bucket").parquet(s"$outDir/docs")
+    (if (cfg.resume) writer.option("partitionOverwriteMode", "dynamic") else writer)
+      .parquet(s"$outDir/docs")
 
     // -- lineage AFTER data commit (resume-safety ordering) -----------------
-    // Returned stats are aggregated from the lineage rows this invocation
-    // writes (exactly-once: derived from durable committed output, so
-    // retried or speculative tasks cannot over-count them).
-    writeLineage(spark, outDir, cfg, done)
+    writeLineage(spark, outDir, cfg,
+      obs.get("buckets").asInstanceOf[scala.collection.Map[Int, scala.collection.Seq[Long]]])
   }
 
   /** Places rows for a `partitionBy("bucket")` sink: one shuffle keyed on
@@ -162,42 +170,60 @@ object ExtractJob {
   }
 
   private def doneBuckets(spark: SparkSession, outDir: String): Seq[Int] = {
-    try {
+    // No lineage yet → nothing done. Checked rather than caught: once a
+    // session has run an `observe`, Spark's observation listener re-plans
+    // every failed query and logs its error at ERROR.
+    val lineage = new org.apache.hadoop.fs.Path(s"$outDir/lineage")
+    if (!lineage.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lineage))
+      Seq.empty
+    else try {
       readLineage(spark, outDir)
         .filter(col("status") === "done")
         .select("bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
     } catch {
-      case _: Exception => Seq.empty // no lineage yet → nothing done
+      case _: Exception => Seq.empty // unreadable lineage → nothing done
     }
   }
 
-  /** Aggregates the buckets this invocation committed (every bucket but
-    * `done`, which resume skipped) from scalar columns of the output, then
-    * writes the ≤ `buckets` rows from the driver: one job, one scan. A
-    * text is empty exactly when its UTF-8 length `bytes_out` is 0. */
+  private type BucketSums = Map[Int, Array[Long]]
+
+  /** Per-bucket sums of (docs, pages, ocr_needed, empty_extractions,
+    * bytes_in, bytes_out) over (bucket, pages, ocr_needed, bytes_in,
+    * bytes_out) rows. The buffer is sparse, bucket → 6 longs: a writer task
+    * ships only the buckets placed on it, not `buckets` slots. A text is
+    * empty exactly when its UTF-8 length `bytes_out` is 0. */
+  private object BucketCounters
+      extends Aggregator[(Int, Long, Long, Long, Long), BucketSums, BucketSums] {
+    def zero: BucketSums = Map.empty
+    def reduce(b: BucketSums, r: (Int, Long, Long, Long, Long)): BucketSums =
+      add(b, r._1, Array(1L, r._2, r._3, if (r._5 == 0L) 1L else 0L, r._4, r._5))
+    def merge(b1: BucketSums, b2: BucketSums): BucketSums =
+      b2.foldLeft(b1) { case (acc, (bucket, c)) => add(acc, bucket, c) }
+    def finish(b: BucketSums): BucketSums = b
+    def bufferEncoder: Encoder[BucketSums] = ExpressionEncoder()
+    def outputEncoder: Encoder[BucketSums] = ExpressionEncoder()
+
+    private def add(b: BucketSums, bucket: Int, c: Array[Long]): BucketSums =
+      b.get(bucket) match {
+        case Some(sums) => var i = 0; while (i < sums.length) { sums(i) += c(i); i += 1 }; b
+        case None => b.updated(bucket, c)
+      }
+  }
+
+  private val bucketCounters =
+    udaf(BucketCounters, ExpressionEncoder[(Int, Long, Long, Long, Long)]())
+
+  /** Writes one "done" row per bucket the sink observed (every bucket this
+    * invocation committed; resume skipped the done ones) from the driver. */
   private def writeLineage(
       spark: SparkSession, outDir: String, cfg: JobConfig,
-      done: Seq[Int]): ExtractStats = {
+      buckets: scala.collection.Map[Int, scala.collection.Seq[Long]]): ExtractStats = {
     import spark.implicits._
-    val allDocs = readDocs(spark, outDir)
-    val newDocs =
-      if (done.isEmpty) allDocs else allDocs.filter(!$"bucket".isin(done: _*))
-    val rows = newDocs
-      .groupBy($"bucket")
-      .agg(
-        count(lit(1)).as("docs"),
-        sum($"total_pages").cast("long").as("pages"),
-        sum($"ocr_page_count").cast("long").as("ocr_needed"),
-        sum(when($"bytes_out" === 0L, 1L).otherwise(0L)).as("empty_extractions"),
-        sum($"bytes_in").as("bytes_in"),
-        sum($"bytes_out").as("bytes_out"))
-      .select($"bucket", lit("done").as("status"), $"docs", $"pages",
-        $"ocr_needed", $"empty_extractions", $"bytes_in", $"bytes_out",
-        lit(cfg.runId).as("run_id"))
-      .as[LineageRow]
-      .collect()
-    spark.createDataset(rows.toSeq).coalesce(1).write
+    val rows = buckets.toSeq.sortBy(_._1).map { case (bucket, c) =>
+      LineageRow(bucket, "done", c(0), c(1), c(2), c(3), c(4), c(5), cfg.runId)
+    }
+    spark.createDataset(rows).coalesce(1).write
       .mode(if (cfg.resume) "append" else "overwrite")
       .parquet(s"$outDir/lineage")
     ExtractStats(

@@ -3,7 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.kernel.{Extractor, ProbeConfig}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -165,15 +165,23 @@ class PipelineSpec extends AnyFunSuite {
       .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
       .toMap
 
+  /** The lineage equals the docs table bucket by bucket: one row per
+    * bucket present, each counter the sum over that bucket's docs (empty
+    * extractions counted by text length, independently of `bytes_out`). */
   private def assertLineageMatchesDocs(out: String): Unit = {
-    val d = ExtractJob.readDocs(spark, out).agg(count(lit(1)), sum("total_pages"),
+    val docs = ExtractJob.readDocs(spark, out)
+    // the corpus exercises the error and empty-extraction counters
+    assert(docs.filter(col("doc_kind") === "error").count() > 0)
+    assert(docs.filter(col("bytes_out") === 0L).count() > 0)
+    def byBucket(rows: Array[Row]): Map[Int, Seq[Long]] =
+      rows.map(r => r.getInt(0) -> (1 to 6).map(r.getAs[Number](_).longValue)).toMap
+    val d = byBucket(docs.groupBy("bucket").agg(count(lit(1)), sum("total_pages"),
       sum("ocr_page_count"), sum(when(length(col("extracted_text")) === 0, 1L)
-        .otherwise(0L)), sum("bytes_in"), sum("bytes_out")).head()
-    val l = ExtractJob.readLineage(spark, out).agg(sum("docs"), sum("pages"),
-      sum("ocr_needed"), sum("empty_extractions"), sum("bytes_in"),
-      sum("bytes_out")).head()
-    for (i <- 0 until 6)
-      assert(d.getAs[Number](i).longValue == l.getAs[Number](i).longValue, s"column $i")
+        .otherwise(0L)), sum("bytes_in"), sum("bytes_out")).collect())
+    val lineage = ExtractJob.readLineage(spark, out).select("bucket", "docs",
+      "pages", "ocr_needed", "empty_extractions", "bytes_in", "bytes_out").collect()
+    assert(lineage.length == d.size)
+    assert(byBucket(lineage) == d)
   }
 
   test("sink layout: with more buckets than writers each bucket is ONE " +

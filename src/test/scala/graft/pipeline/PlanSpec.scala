@@ -5,7 +5,14 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.ops.{Dedup, Similarity, TextOps, WebOps}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +22,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * operators broadcast/shuffle where intended. These lock the 100 TB plan
   * shape at test time, not just the row values. */
 class PlanSpec extends AnyFunSuite {
+
+  /** Plan traversal that descends into adaptive plans and query stages. */
+  private object AqePlans extends AdaptiveSparkPlanHelper
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -622,17 +632,55 @@ class PlanSpec extends AnyFunSuite {
     assert(hidden.isEmpty, report(hidden))
   }
 
-  test("lineage reads only scalar columns of the output: the lineage " +
-    "scan's ReadSchema holds no extracted_text") {
-    val dir = Files.createTempDirectory("graft_plan_lineage_").toString
-    val plans = builtPlans {
-      ExtractJob.run(spark, spark.read.parquet(corpus), dir, JobConfig(buckets = 8))
-      ExtractJob.readLineage(spark, dir)
+  test("ExtractJob.run: no docs re-read, at most 3 jobs, CollectMetrics above the Exchange") {
+    val dir = Files.createTempDirectory("graft_plan_sink_").toString
+    val input = spark.read.parquet(corpus)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobCounter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    val schemas = plans.flatMap(_.linesIterator.filter(_.contains("ReadSchema")))
-      .filter(_.contains("bytes_out"))
-    assert(schemas.nonEmpty, plans.mkString("\n"))
-    assert(schemas.forall(!_.contains("extracted_text")), schemas.mkString("\n"))
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val planCapture = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
+        executed.add(qe.executedPlan)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobCounter)
+    spark.listenerManager.register(planCapture)
+    try {
+      ExtractJob.run(spark, input, dir, JobConfig(buckets = 8))
+      ListenerBusDrain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobCounter)
+      spark.listenerManager.unregister(planCapture)
+    }
+    val plans = executed.asScala.toSeq
+    val report = plans.map(_.treeString).mkString("\n")
+    // kernel shuffle-map stage, docs write, lineage write
+    assert(jobs.get <= 3, s"${jobs.get} jobs:\n$report")
+
+    // the only file scan is the input: the output is never read back
+    val scanned = plans.flatMap(p => AqePlans.collect(p) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+    }).flatten
+    assert(scanned.nonEmpty && scanned.forall(_.endsWith(corpus)), report)
+
+    // the lineage CollectMetrics sits in the write's result stage: the
+    // (bucket, salt) Exchange is below it and no Exchange is above it
+    val sinks = plans.flatMap(p => AqePlans.collect(p) {
+      case cm: CollectMetricsExec => cm
+    }.map(p -> _))
+    assert(sinks.size == 1, report)
+    val (root, cm) = sinks.head
+    val exchanges = (p: SparkPlan) => AqePlans.collect(p) { case e: ShuffleExchangeLike => e }
+    val below = exchanges(cm)
+    assert(below.exists(_.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.map(_.references.map(_.name).toSet) == Seq(Set("bucket"), Set("url"))
+      case _ => false
+    }), root.treeString)
+    assert(exchanges(root).size == below.size, root.treeString)
+
     assert(ExtractJob.readLineage(spark, dir).count() > 0)
   }
 
