@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.expr.KernelExpressions
+import graft.pipeline.LocalFs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +16,7 @@ object ScalePatterns {
     * catalog-table analog of the pipeline's pmod-bucketed directory layout.
     */
   def writeBucketed(df: DataFrame, table: String, keyCol: String, buckets: Int): Unit =
-    df.write
+    df.write.options(LocalFs.writeOptions)
       .mode("overwrite")
       .bucketBy(buckets, keyCol)
       .sortBy(keyCol)

@@ -289,7 +289,7 @@ object CurateJob {
     verdictsWithHash(docs, idCol, textCol, langCol, cfg)
       .observe(obs, count(lit(1)).as("input"),
         verdictNames.map(v => count_if(col("verdict") === v).as(v)): _*)
-      .write.mode("overwrite").parquet(s"$outDir/verdicts")
+      .write.options(LocalFs.writeOptions).mode("overwrite").parquet(s"$outDir/verdicts")
     val committed = spark.read.parquet(s"$outDir/verdicts")
 
     // keepers retain EVERY original column (url, spans, …) plus the
@@ -325,7 +325,7 @@ object CurateJob {
       scrubbed.withColumn("bucket",
         pmod(xxhash64(col("doc_id")), lit(cfg.buckets)).cast("int")),
       col("doc_id"), cfg.buckets, tasks = 0)
-      .write.mode("overwrite").partitionBy("bucket")
+      .write.options(LocalFs.writeOptions).mode("overwrite").partitionBy("bucket")
       .parquet(s"$outDir/curated")
 
     val observed = obs.get

@@ -120,7 +120,7 @@ object ExtractJob {
     val writer = placed.observe(obs, bucketCounters(col("bucket"),
         col("total_pages").cast("long"), col("ocr_page_count").cast("long"),
         col("bytes_in"), col("bytes_out")).as("buckets"))
-      .write.mode("overwrite").partitionBy("bucket")
+      .write.options(LocalFs.writeOptions).mode("overwrite").partitionBy("bucket")
     // Resume writes with DYNAMIC partition overwrite, not append: if a
     // previous run died in the docs-committed/lineage-missing window, the
     // re-extraction of those buckets REPLACES their partitions instead of
@@ -223,7 +223,7 @@ object ExtractJob {
     val rows = buckets.toSeq.sortBy(_._1).map { case (bucket, c) =>
       LineageRow(bucket, "done", c(0), c(1), c(2), c(3), c(4), c(5), cfg.runId)
     }
-    spark.createDataset(rows).coalesce(1).write
+    spark.createDataset(rows).coalesce(1).write.options(LocalFs.writeOptions)
       .mode(if (cfg.resume) "append" else "overwrite")
       .parquet(s"$outDir/lineage")
     ExtractStats(

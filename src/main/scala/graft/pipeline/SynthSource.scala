@@ -28,5 +28,5 @@ object SynthSource {
 
   /** Write a synthetic corpus as a parquet Page table. */
   def writeCorpus(spark: SparkSession, n: Long, seed: Long, path: String): Unit =
-    pages(spark, n, seed).write.mode("overwrite").parquet(path)
+    pages(spark, n, seed).write.options(LocalFs.writeOptions).mode("overwrite").parquet(path)
 }

@@ -16,7 +16,8 @@ import org.apache.spark.sql.Dataset
   * Output goes through the Hadoop FileSystem API using the DRIVER's
   * Hadoop configuration (propagated as key/value pairs into the task
   * closure), so `spark.hadoop.*` settings — object-store credentials,
-  * endpoints, defaultFS — apply on executors.
+  * endpoints, defaultFS — apply on executors; `LocalFs.writeOptions` is
+  * added like any program write's, so `file:` output forks no `chmod`.
   *
   * Task-commit protocol: each attempt writes to an attempt-unique `.tmp`
   * file and then RENAMEs to the final per-partition name. The rename is
@@ -38,7 +39,7 @@ object WarcSink {
       val out = Array.newBuilder[(String, String)]
       val it = c.iterator()
       while (it.hasNext) { val e = it.next(); out += (e.getKey -> e.getValue) }
-      out.result()
+      (out ++= LocalFs.writeOptions).result()
     }
     docs.foreachPartition { (it: Iterator[DocResult]) =>
       if (it.hasNext) {

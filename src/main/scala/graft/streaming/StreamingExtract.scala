@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.model.DocResult
-import graft.pipeline.{CurateConfig, CurateJob, ExtractJob, JobConfig}
+import graft.pipeline.{CurateConfig, CurateJob, ExtractJob, JobConfig, LocalFs}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -36,6 +36,10 @@ object StreamingExtract {
     val pages = spark.readStream.schema(pageSchema).parquet(inputDir)
     ExtractJob.transform(spark, pages, cfg)
       .writeStream
+      // no effect on Spark 4.1: its file stream sink builds its Hadoop conf
+      // from the session, not from the write options, so this sink and its
+      // checkpoint still fork `chmod` per created file
+      .options(LocalFs.writeOptions)
       .format("parquet")
       .option("path", s"$outDir/docs")
       .option("checkpointLocation", checkpoint)

@@ -4,7 +4,7 @@ import java.util.SplittableRandom
 
 import graft.api.{GraftFunctions, OcrDetection}
 import graft.kernel.Synth
-import graft.pipeline.{JobConfig, SynthSource}
+import graft.pipeline.{JobConfig, LocalFs, SynthSource}
 import graft.streaming.StreamingExtract
 import org.apache.spark.sql.SparkSession
 
@@ -96,7 +96,8 @@ object ApiDemo {
     val in = java.nio.file.Files.createTempDirectory("api_demo_in_").toString
     val out = java.nio.file.Files.createTempDirectory("api_demo_out_").toString
     val ckpt = java.nio.file.Files.createTempDirectory("api_demo_ckpt_").toString
-    SynthSource.pages(spark, 100L).toDF().coalesce(1).write.mode("append").parquet(in)
+    SynthSource.pages(spark, 100L).toDF().coalesce(1).write.options(LocalFs.writeOptions)
+      .mode("append").parquet(in)
     StreamingExtract.start(spark, in, out, ckpt, JobConfig(buckets = 4))
       .awaitTermination()
     val n = spark.read.parquet(s"$out/docs").count()

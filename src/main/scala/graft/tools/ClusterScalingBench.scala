@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.pipeline.{ExtractJob, JobConfig, SynthSource}
+import graft.pipeline.{ExtractJob, JobConfig, LocalFs, SynthSource}
 import org.apache.spark.sql.SparkSession
 
 /** Scaling evidence on `local-cluster[numExecutors, coresPerExec, memMB]` —
@@ -98,7 +98,7 @@ object ClusterScalingBench {
 
     val gen = session(baseExecs * 4, coresPerExec)
     SynthSource.pages(gen, n, seed = 42L).repartition(256)
-      .write.mode("overwrite").parquet(corpusPath)
+      .write.options(LocalFs.writeOptions).mode("overwrite").parquet(corpusPath)
     gen.stop()
 
     val pairs = (1 to rounds).map { r =>

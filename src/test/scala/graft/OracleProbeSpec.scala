@@ -26,6 +26,10 @@ class OracleProbeSpec extends AnyFunSuite {
     try Seq("python3", "-c", "import duckdb").! (ProcessLogger(_ => ())) == 0
     catch { case _: Exception => false }
 
+  test("every SparkEntry query has oracle SQL and every oracle SQL a query") {
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+  }
+
   test("xxh64StrCtes ≡ Spark xxhash64 and codepoints ≡ length on strings " +
     "with \\n, \\r and \\t at every stripe and tail position") {
     assume(duckdbAvailable, "python3 duckdb module not available")

@@ -632,6 +632,23 @@ class PlanSpec extends AnyFunSuite {
     assert(hidden.isEmpty, report(hidden))
   }
 
+  test("every .write/.writeStream in src/main/scala passes LocalFs.writeOptions " +
+    "first: no chmod process per created file or directory") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 40, files.size)
+    val write = """\.(write|writeStream)\b(?!\s*\()""".r
+    val sites = for {
+      f <- files
+      code = codeOnly(new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8))
+      m <- write.findAllMatchIn(code)
+    } yield (s"${root.relativize(f)}:${code.substring(0, m.start).count(_ == '\n') + 1}",
+      code.substring(m.end).dropWhile(_.isWhitespace).startsWith(".options(LocalFs.writeOptions)"))
+    assert(sites.size >= 10, sites)
+    assert(sites.forall(_._2), sites.filterNot(_._2).map(_._1).mkString("\n"))
+  }
+
   test("ExtractJob.run: no docs re-read, at most 3 jobs, CollectMetrics above the Exchange") {
     val dir = Files.createTempDirectory("graft_plan_sink_").toString
     val input = spark.read.parquet(corpus)

@@ -2,7 +2,8 @@
 """Local oracle cross-check: for each query in <outdir>/oracle_sql.json,
 compare the Spark parquet result in <outdir>/<name>/ against the same SQL
 run in DuckDB over the testdata parquet tables (emulates the driver's
-column-name-sorted value compare). Usage: check_oracle.py <sfdir> <outdir>.
+column-name-sorted value compare). A query output with no oracle SQL
+counts as a failure. Usage: check_oracle.py <sfdir> <outdir>.
 """
 import sys, json, glob, math
 import duckdb
@@ -82,7 +83,8 @@ def main(sfdir, outdir):
     for n in noracle:
         files = glob.glob(f"{n}/*.parquet")
         cnt = con.sql(f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0] if files else -1
-        print(f"ROWS-ONLY {n.split('/')[-1]}: {cnt} rows")
+        print(f"ROWS-ONLY (no oracle SQL) {n.split('/')[-1]}: {cnt} rows")
+        failures += 1
     print(f"\n{failures} failures")
     sys.exit(1 if failures else 0)
 
