@@ -1041,11 +1041,8 @@ object SparkEntry {
         bits = 1 << 10, numHashes = 4)
       // exact membership: hash-keyed join with text-equality residual
       // (the q53 collision-safe shape) — never a string-keyed shuffle.
-      // Materialized once (round 7): the base-key distinct and the outer
-      // join probe side both consume it.
       val keyed = docs.select(col("doc_id"), col("text"),
         graft.expr.KernelExpressions.fnv1a64(col("text")).as("h"))
-        .localCheckpoint(eager = false)
       val baseKeys = keyed.filter(col("doc_id") % 2 === 0)
         .select(col("h").as("bh"), col("text").as("btext")).distinct()
       val exact = keyed

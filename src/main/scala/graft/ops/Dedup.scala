@@ -365,8 +365,7 @@ object Dedup {
     * Every minhash consumer reads this table 2–3 times (band generation +
     * both sides of the verify join); without the checkpoint each read
     * re-runs the tokenize+shingle+hash scan over the corpus — the
-    * upstream-per-consumer trap the winnow operator already guards
-    * against, and the dominant cost of the round-5 composition queries.
+    * dominant cost of the round-5 composition queries.
     * At true crawl scale the same pattern persists the sketch to a table
     * (it is small: sorted distinct 64-bit fingerprints per doc); the
     * checkpoint is the in-session equivalent and spills to disk.
@@ -673,13 +672,8 @@ object Dedup {
       .select(col("doc_id")).distinct()
       .withColumn("is_exact", lit(true))
 
-    // each side's sketch is materialized once — consumed by the band
-    // generation AND the verify join (see shingleTable; at a 100 TB base
-    // the same pattern persists the base sketch to a stored table)
     def shingled(df: DataFrame) = df.select(col("doc_id"),
       shingleFingerprints(col("text"), shingleK).as("sh"))
-      // filter AFTER the checkpoint boundary — see shingleTable
-      .localCheckpoint(eager = false)
       .filter(size(col("sh")) > 0)
     val bands = bandSize(numHashes, numBands)
     def banded(df: DataFrame) = df
@@ -959,21 +953,16 @@ object Dedup {
   def winnowedOverlapPairs(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, w: Int = 5, minShared: Long = 2L,
       maxDocFreq: Long = 64L): DataFrame =
-    // localCheckpoint: the self-join + stop-fingerprint aggregate would
-    // otherwise re-run the winnow kernel scan once PER consumer (the
-    // measured upstream-per-side trap); materializing the sketch once
-    // makes every consumer read the (small) sketch, not the corpus.
-    winnowedOverlapPairsFromSketch(
-      winnowedFingerprints(df, idCol, textCol, k, w).localCheckpoint(eager = false),
+    winnowedOverlapPairsFromSketch(winnowedFingerprints(df, idCol, textCol, k, w),
       minShared, maxDocFreq)
 
-  /** Pair detection over an already-computed sketch table
-    * ((doc_id, fingerprint)-bearing — [[winnowedFingerprints]] output or
-    * its stored parquet). This is the at-scale entry point: a Spark
-    * self-join evaluates its upstream once PER SIDE, so joining directly
-    * on the kernel flatMap would run the winnow scan twice over the
-    * corpus — materialize the sketch once (it is ~2/(w+1) of gram
-    * volume, bucketable by fingerprint) and join the stored table. */
+  /** Pair detection over a sketch table ((doc_id, fingerprint)-bearing —
+    * [[winnowedFingerprints]] output or its stored parquet). Every
+    * consumer reads the sketch through the one `distinct()` Exchange,
+    * which Spark reuses on both sides of the self-join, so the sketch's
+    * upstream runs once per call: with a materialized sketch or `f2` the
+    * call ran the same jobs, tasks and shuffle bytes (SCALE.md
+    * "Materialization sites"). */
   def winnowedOverlapPairsFromSketch(sketch: DataFrame, minShared: Long,
       maxDocFreq: Long): DataFrame = {
     require(minShared >= 1L && maxDocFreq >= 2L,
@@ -983,10 +972,7 @@ object Dedup {
       .agg(count(lit(1)).as("doc_freq"))
       .filter(col("doc_freq") >= 2L && col("doc_freq") <= maxDocFreq)
       .select(col("fingerprint"))
-    // materialized once (round 7): the self-join consumes this per side —
-    // without the checkpoint each side re-ran the distinct + the
-    // stop-fingerprint screen. Only genuinely shared sketch rows (small).
-    val f2 = fp.join(shared, Seq("fingerprint")).localCheckpoint(eager = false)
+    val f2 = fp.join(shared, Seq("fingerprint"))
     f2.as("a").join(f2.as("b"),
         col("a.fingerprint") === col("b.fingerprint") &&
           col("a.doc_id") < col("b.doc_id"))

@@ -183,26 +183,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Train a REAL coarse quantizer for `ivfTopK` with Lloyd's iterations
-    * (spherical k-means under the cosine measure): initialize from the
-    * `nlist` lowest-id corpus vectors (deterministic), then per iteration
-    * assign every vector to its argmax-cosine centroid (the single
-    * `typedlit` literal — plan O(1) in nlist) and recompute each centroid
-    * as the mean of its members. The per-iteration aggregate is ONE
-    * map-side-combining shuffle of (cluster → dim partial sums) — `dim`
-    * sum expressions, constant in both nlist and corpus size — and the
-    * driver only ever holds nlist×dim doubles ("a trained quantizer").
-    * Empty clusters keep their previous centroid. Assignment ties break
-    * to the smallest centroid index (deterministic); the floating-point
-    * partial-sum order is partition-dependent, so trained centroids are
-    * run-deterministic only up to summation order — fine for a trainer,
-    * which is why q41's oracle keeps the deterministic sample quantizer. */
-  /** The deterministic sample quantizer `ivfTopK` uses by default.
-    * `trainQuantizer` seeds with the same lowest-id rule but over its
-    * null-AND-dimension-filtered assignment base (it knows `dim`; this
-    * one does not), so on clean corpora the two initializations are
-    * identical — the q55 oracle's `WHERE vec_id < nlist` seed — while a
-    * wrong-dimension vector can never become a dead trained centroid. */
   /** Lowest-id centroid seeding — the ONE definition both
     * [[sampleCentroids]] and [[trainQuantizer]] use, so the trained
     * quantizer can never silently initialize differently from the
@@ -223,6 +203,12 @@ object Similarity {
       .collect().map(_.getSeq[Double](1).toArray)
   }
 
+  /** The deterministic sample quantizer `ivfTopK` uses by default.
+    * `trainQuantizer` seeds with the same lowest-id rule but over its
+    * null-AND-dimension-filtered assignment base (it knows `dim`; this
+    * one does not), so on clean corpora the two initializations are
+    * identical — the q55 oracle's `WHERE vec_id < nlist` seed — while a
+    * wrong-dimension vector can never become a dead trained centroid. */
   def sampleCentroids(
       corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int): Array[Array[Double]] =
@@ -230,6 +216,20 @@ object Similarity {
     // param — the q41 oracle's seeding rule)
     seedCentroids(corpus, idCol, vecCol, nlist, dim = None)
 
+  /** Train a REAL coarse quantizer for `ivfTopK` with Lloyd's iterations
+    * (spherical k-means under the cosine measure): initialize from the
+    * `nlist` lowest-id corpus vectors (deterministic), then per iteration
+    * assign every vector to its argmax-cosine centroid (the single
+    * `typedlit` literal — plan O(1) in nlist) and recompute each centroid
+    * as the mean of its members. The per-iteration aggregate is ONE
+    * map-side-combining shuffle of (cluster → dim partial sums) — `dim`
+    * sum expressions, constant in both nlist and corpus size — and the
+    * driver only ever holds nlist×dim doubles ("a trained quantizer").
+    * Empty clusters keep their previous centroid. Assignment ties break
+    * to the smallest centroid index (deterministic); the floating-point
+    * partial-sum order is partition-dependent, so trained centroids are
+    * run-deterministic only up to summation order — fine for a trainer,
+    * which is why q41's oracle keeps the deterministic sample quantizer. */
   def trainQuantizer(
       corpus: DataFrame,
       idCol: String,

@@ -286,11 +286,13 @@ object CurateJob {
       textCol: String, langCol: String, outDir: String,
       cfg: CurateConfig = CurateConfig()): CurateStats = {
     val obs = Observation("verdicts")
-    verdictsWithHash(docs, idCol, textCol, langCol, cfg)
+    val verdictTable = verdictsWithHash(docs, idCol, textCol, langCol, cfg)
+    verdictTable
       .observe(obs, count(lit(1)).as("input"),
         verdictNames.map(v => count_if(col("verdict") === v).as(v)): _*)
       .write.options(LocalFs.writeOptions).mode("overwrite").parquet(s"$outDir/verdicts")
-    val committed = spark.read.parquet(s"$outDir/verdicts")
+    // read back with the schema just written: no schema-inference job
+    val committed = spark.read.schema(verdictTable.schema).parquet(s"$outDir/verdicts")
 
     // keepers retain EVERY original column (url, spans, …) plus the
     // derived doc_id key — curating an extraction output must not strip

@@ -29,16 +29,28 @@ object StreamingExtract {
 
   /** Start the continuous extraction query: new parquet files appearing
     * under `inputDir` are extracted exactly once (file-source checkpoint)
-    * into bucket-partitioned parquet under `outDir`. */
+    * into bucket-partitioned parquet under `outDir`.
+    *
+    * The query runs in a child session that carries the caller's SQL conf
+    * plus [[LocalFs.writeOptions]]: Spark 4.1's file stream sink, its
+    * `_spark_metadata` log and the checkpoint writers take their Hadoop
+    * conf from the session (`sessionState.newHadoopConf()`), not from the
+    * write options. The two logs are written through the FileSystem-based
+    * checkpoint file manager: the default FileContext-based one goes
+    * through Hadoop's `AbstractFileSystem` for `file:`, which forks
+    * `chmod` per created file and `readlink` per rename whatever
+    * `fs.file.impl` says. The caller's session is left unchanged. */
   def start(spark: SparkSession, inputDir: String, outDir: String,
       checkpoint: String, cfg: JobConfig = JobConfig(),
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val pages = spark.readStream.schema(pageSchema).parquet(inputDir)
-    ExtractJob.transform(spark, pages, cfg)
+    val session = spark.newSession()
+    val streamConf = LocalFs.writeOptions + ("spark.sql.streaming.checkpointFileManagerClass" ->
+      "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+    for ((k, v) <- spark.conf.getAll ++ streamConf if !session.conf.getOption(k).contains(v))
+      session.conf.set(k, v)
+    val pages = session.readStream.schema(pageSchema).parquet(inputDir)
+    ExtractJob.transform(session, pages, cfg)
       .writeStream
-      // no effect on Spark 4.1: its file stream sink builds its Hadoop conf
-      // from the session, not from the write options, so this sink and its
-      // checkpoint still fork `chmod` per created file
       .options(LocalFs.writeOptions)
       .format("parquet")
       .option("path", s"$outDir/docs")

@@ -7,6 +7,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
+import graft.streaming.StreamingExtract
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, Path, RawLocalFileSystem}
@@ -101,6 +102,22 @@ class LocalFsSpec extends AnyFunSuite {
       WarcSink.writeWet(ExtractJob.readDocsTyped(spark, out), s"$out/wet"))
     assert(wet.isEmpty, s"${wet.size} processes:\n${wet.take(5).mkString("\n")}")
     assert(Files.list(Paths.get(s"$out/wet")).count() > 0)
+  }
+
+  test("StreamingExtract.start starts no process and leaves the caller's " +
+    "session conf unset") {
+    val in = tempDir("graft_localfs_stream_in_")
+    SynthSource.pages(spark, 200L).toDF().coalesce(1)
+      .write.options(LocalFs.writeOptions).mode("append").parquet(in)
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
+    val out = tempDir("graft_localfs_stream_out_")
+    // sink files, `_spark_metadata` and checkpoint: 80 forks through
+    // Hadoop's own local file systems
+    val stream = processStarts(StreamingExtract.start(spark, in, out,
+      tempDir("graft_localfs_stream_ckpt_"), cfg).awaitTermination())
+    assert(stream.isEmpty, s"${stream.size} processes:\n${stream.take(5).mkString("\n")}")
+    assert(spark.read.parquet(s"$out/docs").count() == 200L)
+    assert(spark.conf.getOption("fs.file.impl").isEmpty)
   }
 
   test("every file and directory of the output has the mode the default " +

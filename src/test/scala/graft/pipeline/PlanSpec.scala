@@ -603,15 +603,17 @@ class PlanSpec extends AnyFunSuite {
     ("graft/ops/TextOps.scala", "repetitionSignals") -> 1,
     ("graft/SparkEntry.scala", "quantizedEmbeddings") -> 1)
 
-  test("lambda higher-order calls in src/main/scala only at the allowlisted " +
-    "folds; everywhere else Spark built-ins") {
+  /** Every call `find` locates in the code of src/main/scala, as (file,
+    * site, line): the site is the enclosing member def, or the SparkEntry
+    * query. */
+  private def sourceCalls(find: String => Seq[Int]): Seq[(String, String, Int)] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.size > 40, files.size)
     val memberDef = """(?m)^  (?:private(?:\[\w+\])? )?(?:override )?def (\w+)""".r
     val query = """(?m)^\s*"(q\d+\w*)" ->""".r
-    def calls(find: String => Seq[Int]): Seq[(String, String, Int)] = for {
+    for {
       f <- files
       src = new String(Files.readAllBytes(f), java.nio.charset.StandardCharsets.UTF_8)
       code = codeOnly(src)
@@ -623,13 +625,60 @@ class PlanSpec extends AnyFunSuite {
       val line = src.substring(0, at).count(_ == '\n') + 1
       (root.relativize(f).toString, site, line)
     }
-    def report(found: Seq[(String, String, Int)]): String = found.sortBy(h => (h._1, h._3))
-      .map { case (f, site, line) => s"$f:$line ($site)" }.mkString("\n")
-    val found = calls(lambdaCalls)
-    val bySite = found.groupBy(h => (h._1, h._2)).map { case (k, v) => k -> v.size }
-    assert(bySite == lambdaAllowlist, report(found))
-    val hidden = calls(hiddenLambdaCalls)
+  }
+
+  private def report(found: Seq[(String, String, Int)]): String = found.sortBy(h => (h._1, h._3))
+    .map { case (f, site, line) => s"$f:$line ($site)" }.mkString("\n")
+
+  private def bySite(found: Seq[(String, String, Int)]): Map[(String, String), Int] =
+    found.groupBy(h => (h._1, h._2)).map { case (k, v) => k -> v.size }
+
+  test("lambda higher-order calls in src/main/scala only at the allowlisted " +
+    "folds; everywhere else Spark built-ins") {
+    val found = sourceCalls(lambdaCalls)
+    assert(bySite(found) == lambdaAllowlist, report(found))
+    val hidden = sourceCalls(hiddenLambdaCalls)
     assert(hidden.isEmpty, report(hidden))
+  }
+
+  /** The only materializations left in src/main/scala, by file and site.
+    * Each was measured against the same code without it; the SCALE.md
+    * table "Materialization sites" gives its consumers and what removing
+    * it cost. */
+  private val materializeAllowlist: Map[(String, String), Int] = Map(
+    ("graft/Bench.scala", "main") -> 1,
+    ("graft/ops/Dedup.scala", "normalizedDedupVerdicts") -> 1,
+    ("graft/ops/Dedup.scala", "connectedComponentsWithRounds") -> 2,
+    ("graft/ops/Dedup.scala", "starForest") -> 1,
+    ("graft/ops/Dedup.scala", "shingleTable") -> 1,
+    ("graft/ops/Dedup.scala", "bandTable") -> 1,
+    ("graft/ops/Dedup.scala", "simhashNearDups") -> 1,
+    ("graft/ops/Dedup.scala", "ngramJaccardPairs") -> 1,
+    ("graft/ops/Dedup.scala", "removeDuplicatedSpans") -> 1,
+    ("graft/ops/ScalePatterns.scala", "valueQuantileBuckets") -> 1,
+    ("graft/ops/Similarity.scala", "trainQuantizer") -> 1,
+    ("graft/ops/Similarity.scala", "cosineNearDups") -> 1,
+    ("graft/ops/Similarity.scala", "semDedup") -> 1,
+    ("graft/ops/TextOps.scala", "bpeMerges") -> 2,
+    ("graft/ops/TextOps.scala", "trainQualityWeights") -> 1,
+    ("graft/ops/TextOps.scala", "dsirBucketWeights") -> 1,
+    ("graft/ops/TextOps.scala", "bigramLmScores") -> 1,
+    ("graft/ops/TextOps.scala", "perplexityPartition") -> 1,
+    ("graft/ops/TextOps.scala", "bm25TopK") -> 2,
+    ("graft/ops/TextOps.scala", "sourceReputation") -> 2,
+    ("graft/pipeline/CurateJob.scala", "verdictsWithHash") -> 1)
+
+  test("materializations (localCheckpoint/checkpoint/persist/cache) in " +
+    "src/main/scala only at the allowlisted sites, each a SCALE.md row") {
+    val call = """\.(localCheckpoint|checkpoint|persist|cache)(?![\w$])""".r
+    val found = sourceCalls(code => call.findAllMatchIn(code).map(_.start).toSeq)
+    assert(bySite(found) == materializeAllowlist, report(found))
+    val scale = new String(Files.readAllBytes(java.nio.file.Paths.get("SCALE.md")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val unlisted = materializeAllowlist.keys.map { case (f, site) =>
+      s"`${f.split('/').last.stripSuffix(".scala")}.$site`"
+    }.filterNot(scale.contains)
+    assert(unlisted.isEmpty, unlisted)
   }
 
   test("every .write/.writeStream in src/main/scala passes LocalFs.writeOptions " +
@@ -649,32 +698,37 @@ class PlanSpec extends AnyFunSuite {
     assert(sites.forall(_._2), sites.filterNot(_._2).map(_._1).mkString("\n"))
   }
 
-  test("ExtractJob.run: no docs re-read, at most 3 jobs, CollectMetrics above the Exchange") {
-    val dir = Files.createTempDirectory("graft_plan_sink_").toString
-    val input = spark.read.parquet(corpus)
+  /** The number of Spark jobs `body` starts. */
+  private def jobCount(body: => Unit): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val jobCounter = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
+    spark.sparkContext.addSparkListener(jobCounter)
+    try {
+      body
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(jobCounter)
+    jobs.get
+  }
+
+  test("ExtractJob.run: no docs re-read, at most 3 jobs, CollectMetrics above the Exchange") {
+    val dir = Files.createTempDirectory("graft_plan_sink_").toString
+    val input = spark.read.parquet(corpus)
     val executed = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val planCapture = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
         executed.add(qe.executedPlan)
       def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.sparkContext.addSparkListener(jobCounter)
     spark.listenerManager.register(planCapture)
-    try {
-      ExtractJob.run(spark, input, dir, JobConfig(buckets = 8))
-      ListenerBusDrain(spark.sparkContext)
-    } finally {
-      spark.sparkContext.removeSparkListener(jobCounter)
-      spark.listenerManager.unregister(planCapture)
-    }
+    val jobs =
+      try jobCount(ExtractJob.run(spark, input, dir, JobConfig(buckets = 8)))
+      finally spark.listenerManager.unregister(planCapture)
     val plans = executed.asScala.toSeq
     val report = plans.map(_.treeString).mkString("\n")
     // kernel shuffle-map stage, docs write, lineage write
-    assert(jobs.get <= 3, s"${jobs.get} jobs:\n$report")
+    assert(jobs <= 3, s"$jobs jobs:\n$report")
 
     // the only file scan is the input: the output is never read back
     val scanned = plans.flatMap(p => AqePlans.collect(p) {
@@ -699,6 +753,15 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges(root).size == below.size, root.treeString)
 
     assert(ExtractJob.readLineage(spark, dir).count() > 0)
+  }
+
+  test("CurateJob.run: committed verdicts read back with their written " +
+    "schema, at most 12 jobs") {
+    val docs = ExtractJob.readDocs(spark, outDir)
+    docs.count()
+    val dir = Files.createTempDirectory("graft_plan_curate_").toString
+    val jobs = jobCount(CurateJob.run(spark, docs, "url", "extracted_text", "lang", dir))
+    assert(jobs <= 12, s"$jobs jobs")
   }
 
   test("operators converted from lambdas to built-ins plan no " +

@@ -3,9 +3,11 @@
 compare the Spark parquet result in <outdir>/<name>/ against the same SQL
 run in DuckDB over the testdata parquet tables (emulates the driver's
 column-name-sorted value compare). A query output with no oracle SQL
-counts as a failure. Usage: check_oracle.py <sfdir> <outdir>.
+counts as a failure. Each compared query's line carries its DuckDB wall
+time (SQL run and rows fetched); the total and the five slowest queries
+close the report. Usage: check_oracle.py <sfdir> <outdir>.
 """
-import sys, json, glob, math
+import sys, json, glob, math, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -34,6 +36,7 @@ def main(sfdir, outdir):
         con.sql(f"CREATE VIEW {t} AS FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
     failures = 0
+    oracle_s = {}
     for name in sorted(oracle):
         sql = oracle[name]
         files = glob.glob(f"{outdir}/{name}/*.parquet")
@@ -44,6 +47,7 @@ def main(sfdir, outdir):
         srel = con.sql(f"SELECT * FROM read_parquet({files!r})")
         scols, srows = canon(srel.fetchall(), [c for c in srel.columns])
         try:
+            t0 = time.perf_counter()
             drel = con.sql(sql)
             # the driver's hash compare is type-sensitive: DuckDB widens
             # uncast integer sum() to HUGEINT (int128), which hash-mismatches
@@ -55,29 +59,32 @@ def main(sfdir, outdir):
                       f"(cast sums to BIGINT)")
                 failures += 1
                 continue
-            dcols, drows = canon(drel.fetchall(), [c for c in drel.columns])
+            fetched = drel.fetchall()
+            oracle_s[name] = time.perf_counter() - t0
+            dcols, drows = canon(fetched, [c for c in drel.columns])
         except Exception as e:
             print(f"ORACLE SQL ERROR: {name}: {e}")
             failures += 1
             continue
+        took = f"(oracle {oracle_s[name]:.2f} s)"
         if scols != dcols:
-            print(f"SCHEMA MISMATCH {name}: spark={scols} duck={dcols}")
+            print(f"SCHEMA MISMATCH {name} {took}: spark={scols} duck={dcols}")
             failures += 1
             continue
         if len(srows) != len(drows):
-            print(f"ROWCOUNT MISMATCH {name}: spark={len(srows)} duck={len(drows)}")
+            print(f"ROWCOUNT MISMATCH {name} {took}: spark={len(srows)} duck={len(drows)}")
             failures += 1
             continue
         if srows != drows:
             diff = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
-            print(f"VALUE MISMATCH {name}: {len(diff)} differing rows; first:")
+            print(f"VALUE MISMATCH {name} {took}: {len(diff)} differing rows; first:")
             i = diff[0]
             print(f"  cols : {scols}")
             print(f"  spark: {srows[i]}")
             print(f"  duck : {drows[i]}")
             failures += 1
             continue
-        print(f"OK {name}: {len(srows)} rows")
+        print(f"OK {name}: {len(srows)} rows {took}")
     noracle = [n for n in sorted(glob.glob(f"{outdir}/q*")) if
                n.split('/')[-1] not in oracle]
     for n in noracle:
@@ -85,7 +92,10 @@ def main(sfdir, outdir):
         cnt = con.sql(f"SELECT count(*) FROM read_parquet({files!r})").fetchone()[0] if files else -1
         print(f"ROWS-ONLY (no oracle SQL) {n.split('/')[-1]}: {cnt} rows")
         failures += 1
-    print(f"\n{failures} failures")
+    print(f"\noracle total {sum(oracle_s.values()):.2f} s over {len(oracle_s)} queries; slowest:")
+    for name in sorted(oracle_s, key=oracle_s.get, reverse=True)[:5]:
+        print(f"  {name}: {oracle_s[name]:.2f} s")
+    print(f"{failures} failures")
     sys.exit(1 if failures else 0)
 
 if __name__ == "__main__":
