@@ -341,35 +341,6 @@ object Similarity {
       .filter(col("cosine") >= threshold)
   }
 
-  /** Ungrouped variant — the bands alone are the bucketing. Without a group
-    * column the candidate-join key cardinality drops from
-    * |groups| × numBands × 2^bandBits to numBands × 2^bandBits, so at large
-    * corpus sizes pick numPlanes/numBands so that 2^(numPlanes/numBands)
-    * keeps per-bucket occupancy bounded (each bucket is joined with itself;
-    * the pair count per bucket is quadratic in its occupancy). With a
-    * natural blocking key available, prefer the grouped overload. */
-  def cosineNearDups(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      numPlanes: Int,
-      numBands: Int,
-      dim: Int,
-      seed: Long): DataFrame = {
-    val g = "__graft_ungrouped_band_key"
-    cosineNearDups(df.withColumn(g, lit(0)), idCol, vecCol, g, threshold,
-      numPlanes, numBands, dim, seed)
-  }
-
-  /** Ungrouped variant with the grouped overload's default parameters. */
-  def cosineNearDups(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      threshold: Double): DataFrame =
-    cosineNearDups(df, idCol, vecCol, threshold, 16, 4, 64, 42L)
-
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication by cluster-then-screen. K-means clusters the corpus
     * embeddings (the [[trainQuantizer]] Lloyd's machinery — deterministic

@@ -114,112 +114,22 @@ object TextOps {
     * tokenizer-training loop), returned as (step, left_sym, right_sym,
     * pair_count).
     *
-    * Shuffle story at 100 TB: the corpus is touched ONCE (token count →
-    * the vocabulary table, map-side combining); every merge iteration
-    * then runs on the VOCABULARY (bounded by distinct tokens, independent
-    * of corpus row count): one pair-explode + map-side-combining sum, one
-    * TakeOrdered(1), and a row-local merge application. The driver holds
-    * one (left, right) pair per step — like loading a trained quantizer,
-    * never corpus-sized state.
+    * The corpus is touched ONCE (a map-side-combining token count); what
+    * reaches the driver is the VOCABULARY — distinct tokens, never corpus
+    * rows — and every merge iteration runs on it in driver memory, so a
+    * 32k-merge tokenizer costs one Spark job cycle, not 32k. Pair counts
+    * are maintained incrementally: only pairs touching the merged symbol
+    * change between steps (SCALE.md §BPE).
     *
     * Determinism: pair counts are exact integers; the argmax tie-breaks
-    * (count DESC, left ASC, right ASC — binary string order); the merge
-    * application is the EXACT greedy left-to-right BPE scan
-    * (`applyMerge`: one anchored replace over a U+0001-joined symbol
-    * string — the separator anchors every symbol START, so a rule (o,w)
-    * can never falsely match the suffix of symbol "lo", and matches do
-    * not overlap, handling runs like [a,a,a,a] → [aa,aa] correctly).
-    * DuckDB reproduces the scan with `list_reduce` over the same
-    * pre-separated elements, so the whole training trace is
-    * oracle-checkable (q56 unrolls the iterations in SQL). Symbols are
-    * UTF-16-unit chars (ASCII-identical to code points; the oracle corpus
-    * is ASCII). */
-  def bpeMerges(df: DataFrame, textCol: String, steps: Int): DataFrame = {
-    val spark = df.sparkSession
-    val sep = "\u0001" // never occurs in tokens
-    var vocab = df.select(explode(split(col(textCol), " ")).as("token"))
-      // tokens carrying the U+0001 separator itself would corrupt the
-      // joined-string merge application — excluded from training (real
-      // crawls do contain stray control bytes)
-      .filter(col("token") =!= "" && !col("token").contains(sep))
-      .groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-      .select(col("cnt"),
-        array_remove(split(col("token"), ""), "").as("syms"))
-      .localCheckpoint(eager = false)
-    val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    var step = 1
-    var exhausted = false
-    while (step <= steps && !exhausted) {
-      // adjacent symbol pairs: two equal-length slices zipped (empty for
-      // single-symbol tokens)
-      val m = greatest(size(col("syms")) - 1, lit(0))
-      val top = vocab
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("syms"), lit(1), m).as("l"),
-          slice(col("syms"), lit(2), m).as("r"))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("cnt")).as("freq"))
-        .orderBy(col("freq").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (l, r, f) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        merges += ((step, l, r, f))
-        vocab = vocab.select(col("cnt"),
-          applyMerge(col("syms"), l, r).as("syms"))
-          .localCheckpoint(eager = false)
-        step += 1
-      }
-    }
-    import spark.implicits._
-    merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count")
-  }
-
-  /** One greedy left-to-right BPE merge pass over a symbol array — the
-    * standard (Sennrich) scan: walk symbols once; when the previous
-    * retained symbol is `l` and the current is `r`, fuse them (the fused
-    * symbol then cannot start the next pair, so [a,a,a,a] under (a,a) →
-    * [aa,aa]). Implemented as one anchored `regexp_replace` over the
-    * symbols joined with a U+0001 prefix each ([[mergeReplace]]); DuckDB
-    * replicates the scan with `list_reduce` over identically pre-separated
-    * elements (q56/q57 oracles). */
-  private[ops] def applyMerge(syms: Column, l: String, r: String): Column = {
-    val sep = "\u0001"
-    array_remove(split(mergeReplace(concat(lit(sep), array_join(syms, sep)),
-      l, r, sep), sep), "")
-  }
-
-  /** Replace every leftmost non-overlapping `sep l sep r` whose `r` ends a
-    * symbol (`end` follows, or the string ends) by `sep lr` — the greedy
-    * merge scan over U+0001-prefixed symbols. The separator before `l`
-    * anchors a symbol START, so a rule (o,w) never matches the suffix of
-    * a symbol like "lo"; `\z`, not `$`, because `$` also matches before a
-    * final `\n` and a symbol can be `\n`. */
-  private def mergeReplace(joined: Column, l: String, r: String, end: String): Column = {
-    val sep = "\u0001"
-    regexp_replace(joined,
-      lit(sep + Pattern.quote(l) + sep + Pattern.quote(r) + s"(?=$end|\\z)"),
-      lit(Matcher.quoteReplacement(sep + l + r)))
-  }
-
-  /** BPE merge training with DRIVER-SIDE iterations — trace-identical to
-    * [[bpeMerges]] (same pair counts, same tie-breaks, same greedy merge
-    * scan), built for REALISTIC merge counts: `bpeMerges` runs one Spark
-    * job cycle per merge, so a 32k-merge tokenizer would mean 32k driver
-    * round trips over the cluster. This variant touches the corpus ONCE
-    * (the same map-side-combining token count), then collects the
-    * VOCABULARY — bounded by distinct tokens, a few million rows at any
-    * corpus size, never corpus-sized — and runs all `steps` Lloyd-free
-    * merge iterations in memory. The trade (SCALE.md §BPE): per-step
-    * driver CPU over vocabulary-sized arrays vs per-step cluster jobs;
-    * at 32k merges the driver loop wins by orders of magnitude, and an
-    * incremental pair-count refresh (only pairs touching the merged
-    * symbol change between steps) keeps each step sub-linear in vocab.
-    *
-    * Parity details: symbol split replicates Spark's `split(token, "")`
-    * (code-point steps); the argmax tie-break compares strings in UTF-8
-    * binary order (Spark's StringType ordering), which Java's UTF-16
-    * `compareTo` does NOT match for supplementary characters.
+    * (count DESC, left ASC, right ASC) compare strings in UTF-8 binary
+    * order (Spark's StringType ordering, which Java's UTF-16 `compareTo`
+    * does NOT match for supplementary characters); symbols are code
+    * points, as Spark's `split(token, "")`; each merge is the EXACT
+    * greedy left-to-right scan ([[mergeSymbols]]). DuckDB reproduces the
+    * scan with `list_reduce`, so the whole trace is oracle-checkable
+    * (q56 unrolls the iterations in SQL). Tokens carrying the U+0001
+    * separator of the apply side ([[bpeSymbolCount]]) are excluded.
     *
     * Driver-memory bound: the vocabulary collect is bounded by DISTINCT
     * tokens — a few million rows on clean corpora, but 100 TB of raw web
@@ -230,15 +140,15 @@ object TextOps {
     * floor also bounds what leaves the executors); `maxVocab` > 0
     * additionally keeps only the top-N tokens by (count DESC, token ASC
     * — deterministic ties). TRUNCATION SEMANTICS, stated: with the
-    * defaults (minCount=1, maxVocab=0) the trace is exactly
-    * [[bpeMerges]]'; with a floor, pair counts lose the contributions of
-    * sub-floor tokens, so a merge whose support lives mostly in the
-    * dropped tail can rank differently — the standard trade of every
-    * production BPE trainer (a pair seen only inside below-minCount
-    * tokens has bounded support and cannot beat repeated-support pairs
-    * at realistic merge counts). Above the floor the incremental pair
-    * counts and tie-breaks are unchanged. */
-  def bpeMergesLocal(df: DataFrame, textCol: String, steps: Int,
+    * defaults (minCount=1, maxVocab=0) the trace is the exact one over
+    * the whole vocabulary; with a floor, pair counts lose the
+    * contributions of sub-floor tokens, so a merge whose support lives
+    * mostly in the dropped tail can rank differently — the standard
+    * trade of every production BPE trainer (a pair seen only inside
+    * below-minCount tokens has bounded support and cannot beat
+    * repeated-support pairs at realistic merge counts). Above the floor
+    * the incremental pair counts and tie-breaks are unchanged. */
+  def bpeMerges(df: DataFrame, textCol: String, steps: Int,
       minCount: Long = 1L, maxVocab: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val sep = "\u0001"
@@ -330,7 +240,7 @@ object TextOps {
           val (cnt, ss) = syms(t)
           addPairs(cnt, ss, -1L)
           indexRemove(t, ss)
-          val merged = applyMergeLocal(ss, l, r)
+          val merged = mergeSymbols(ss, l, r)
           addPairs(cnt, merged, 1L)
           indexAdd(t, merged)
           syms(t) = (cnt, merged)
@@ -371,10 +281,11 @@ object TextOps {
     Integer.compare(a.length - i, b.length - j)
   }
 
-  /** [[applyMerge]]'s greedy left-to-right scan, driver-side: the fused
-    * symbol participates in the NEXT comparison ([a,a,a,a] under (a,a) →
-    * [aa,aa]). */
-  private[ops] def applyMergeLocal(
+  /** One greedy left-to-right BPE merge pass over a symbol array — the
+    * standard (Sennrich) scan: when the previous retained symbol is `l`
+    * and the current is `r`, fuse them; the fused symbol participates in
+    * the NEXT comparison ([a,a,a,a] under (a,a) → [aa,aa]). */
+  private[ops] def mergeSymbols(
       ss: Array[String], l: String, r: String): Array[String] = {
     val out = mutable.ArrayBuffer[String]()
     ss.foreach { x =>
@@ -391,7 +302,7 @@ object TextOps {
     * one anchored replace ([[mergeReplace]], which also stops at a space,
     * so merges never cross token boundaries), and the count is the number
     * of U+0001 left. The merge application is `bpeMerges`' exact greedy
-    * scan (`applyMerge`), so the count is reproducible by the DuckDB
+    * scan ([[mergeSymbols]]), so the count is reproducible by the DuckDB
     * oracle (q57) applying the same fold chain. */
   def bpeSymbolCount(text: Column, merges: Seq[(String, String)]): Column = {
     val sep = "\u0001"
@@ -407,6 +318,19 @@ object TextOps {
     }
     (sepChars + length(merged) - length(replace(merged, lit(sep), lit(""))))
       .cast("long")
+  }
+
+  /** Replace every leftmost non-overlapping `sep l sep r` whose `r` ends a
+    * symbol (`end` follows, or the string ends) by `sep lr` — the greedy
+    * merge scan over U+0001-prefixed symbols. The separator before `l`
+    * anchors a symbol START, so a rule (o,w) never matches the suffix of
+    * a symbol like "lo"; `\z`, not `$`, because `$` also matches before a
+    * final `\n` and a symbol can be `\n`. */
+  private def mergeReplace(joined: Column, l: String, r: String, end: String): Column = {
+    val sep = "\u0001"
+    regexp_replace(joined,
+      lit(sep + Pattern.quote(l) + sep + Pattern.quote(r) + s"(?=$end|\\z)"),
+      lit(Matcher.quoteReplacement(sep + l + r)))
   }
 
   /** Gopher-style quality signals (Rae et al. 2021 §A1.1 subset that is

@@ -5,21 +5,25 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 
 import graft.SparkEntry
+import graft.pipeline.LocalFs
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Query profiler for SparkEntry queries. Times each named query `reps`
   * times, round-robin (so a host-capacity drift hits every query equally
-  * rather than whichever ran last — the BENCH.md §0 discipline), through
-  * `.count()` after a q35 warm-up, as `graft.Bench` does. After every
-  * query it prints one line per Spark job in submission order: wall clock,
-  * stages, tasks, summed executor task time and the graft call sites of
-  * each stage — where a multi-job query (checkpoint materializations,
-  * iterative rounds, convergence checks) spends its time. With `planDir`,
-  * each query's formatted physical plan is first written to
-  * `<planDir>/<query>.txt`. Usage:
+  * rather than whichever ran last — the BENCH.md §0 discipline), after a
+  * q35 warm-up, through a `noop` write of every row: `.count()` would let
+  * column pruning pass through a removed checkpoint and under-report what
+  * the output costs. `rows=` is an `Observation` count on the written
+  * frame. After every query it prints one line per Spark job in
+  * submission order: wall clock, stages, tasks, summed executor task time
+  * and the graft call sites of each stage — where a multi-job query
+  * (checkpoint materializations, iterative rounds, convergence checks)
+  * spends its time. With `planDir`, each query's formatted physical plan
+  * is first written to `<planDir>/<query>.txt`. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=<sf-dir> sbt -batch \
   *     "runMain graft.tools.QueryProfile q45_dedup_components,q80_leakage_split [reps] [planDir]"
@@ -94,7 +98,10 @@ object QueryProfile {
       Seq(jobStart, jobWall, jobStages, jobTaskSecs, jobTasks, jobSite, stageToJob)
         .foreach(_.clear())
       val t0 = System.nanoTime()
-      val cnt = SparkEntry.queries(n)(spark, sfDir).count()
+      val obs = Observation()
+      SparkEntry.queries(n)(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
+        .write.options(LocalFs.writeOptions).format("noop").mode("overwrite").save()
+      val cnt = obs.get("rows")
       val secs = (System.nanoTime() - t0) / 1e9
       ListenerBusDrain(spark.sparkContext)
       println(f"[qprofile] rep=$r $n%-28s $secs%8.3f s rows=$cnt")

@@ -188,7 +188,6 @@ class HofBuiltinSpec extends AnyFunSuite {
   for ((mode, conf) <- modes) {
     test(s"row-local sites: the built-in forms ≡ their lambda forms ($mode)") {
       withConf(spark, conf) {
-        val syms = array_remove(split(coalesce(text, lit("")), ""), "")
         val gopher = Lambda.gopher(text).zip(TextOps.gopherSignalCols(text))
           .zip(Seq("word_count", "mean_word_len", "alpha_word_ppm"))
           .map { case ((o, n), name) => (s"gopherSignalCols.$name", o, n) }
@@ -208,14 +207,7 @@ class HofBuiltinSpec extends AnyFunSuite {
           ("q68 distinct tokens",
             size(array_distinct(Lambda.nonEmpty(split(coalesce(text, lit("")), " ")))),
             size(array_distinct(array_remove(split(coalesce(text, lit("")), " "), ""))))) ++
-          gopher ++
-          merges.map { case (l, r) =>
-            (s"applyMerge($l, $r)", Lambda.applyMerge(syms, l, r),
-              TextOps.applyMerge(syms, l, r))
-          } ++ Seq(
-          ("applyMerge chain", merges.foldLeft(syms) { case (sy, (l, r)) =>
-            Lambda.applyMerge(sy, l, r) },
-            merges.foldLeft(syms) { case (sy, (l, r)) => TextOps.applyMerge(sy, l, r) }),
+          gopher ++ Seq(
           ("bpeSymbolCount", Lambda.bpeSymbolCount(text, merges),
             TextOps.bpeSymbolCount(text, merges)),
           ("sortedBigrams (repetitionSignals)", Lambda.sortedBigrams(text),
@@ -266,29 +258,6 @@ class HofBuiltinSpec extends AnyFunSuite {
         for (r <- rows; ((site, _, _), j) <- shapes.zipWithIndex)
           assert(r.get(2 + 2 * j) == r.get(3 + 2 * j), s"$site, id=${r.getLong(0)}")
         assert(rows.exists(r => r.getString(2).nonEmpty))
-      }
-    }
-
-    test(s"bpeMerges pair explode: arrays_zip of two slices ≡ the " +
-      s"transform over sequence(1, n - 1) ($mode)") {
-      withConf(spark, conf) {
-        val vocab = cases.select(col("id"),
-          array_remove(split(coalesce(text, lit("")), ""), "").as("syms"))
-        val syms = col("syms")
-        val pairIdx = when(size(syms) >= 2, sequence(lit(1), size(syms) - 1))
-          .otherwise(array().cast("array<int>"))
-        val lambda = vocab.select(col("id"), posexplode(transform(pairIdx,
-          i => struct(element_at(syms, i).as("l"), element_at(syms, i + 1).as("r")))))
-        val m = greatest(size(syms) - 1, lit(0))
-        val now = vocab.select(col("id"), posexplode(arrays_zip(
-          slice(syms, lit(1), m).as("l"), slice(syms, lit(2), m).as("r"))))
-        def rows(df: DataFrame): Seq[(Long, Int, String, String)] =
-          df.select(col("id"), col("pos"), col("col.l"), col("col.r")).collect()
-            .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.getString(3)))
-            .toSeq.sorted
-        val ref = rows(lambda)
-        assert(ref.nonEmpty)
-        assert(rows(now) == ref)
       }
     }
 

@@ -193,13 +193,6 @@ class OpsSpec extends AnyFunSuite {
     assert(found >= 8, s"recall too low: $found/10; pairs=$pairs")
     // every emitted pair really passes the exact-cosine threshold
     assert(pairs.forall { case (a, b) => a < b })
-
-    // ungrouped overload: no blocking key needed — bands alone bucket, and
-    // recall on the same corpus matches the constant-group run exactly
-    val ungrouped = Similarity.cosineNearDups(
-      e.union(dups).drop("label"), "vec_id", "embedding", 0.99)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ungrouped == pairs, s"ungrouped=$ungrouped grouped=$pairs")
   }
 
   test("canonicalByQuality: components keep the argmax-score member " +
@@ -638,25 +631,24 @@ class OpsSpec extends AnyFunSuite {
     assert(none.isEmpty)
   }
 
-  test("BPE driver-side training (bpeMergesLocal) is trace-identical to " +
-    "the per-step Spark loop: same merges, ties, counts, exhaustion") {
-    // a corpus exercising ties, merged-symbol reuse and repeated chars
-    val df = Seq("low low low", "lower lowest", "aaaa aa banana",
-      "the theme theater", "zz zz zz z").toDF("text")
+  test("BPE merges: frozen traces over ties, merged-symbol reuse, repeated " +
+    "chars, exhaustion and U+0001 tokens") {
     def trace(got: org.apache.spark.sql.DataFrame) =
       got.collect().map(r => (r.getInt(0), r.getString(1), r.getString(2),
         r.getLong(3))).toSeq
-    val steps = 8
-    val spark1 = trace(TextOps.bpeMerges(df, "text", steps))
-    val local = trace(TextOps.bpeMergesLocal(df, "text", steps))
-    assert(local == spark1, s"\nspark: $spark1\nlocal: $local")
-    // exhaustion parity on a pairless corpus
-    assert(trace(TextOps.bpeMergesLocal(Seq("a b a").toDF("text"), "text", 2))
-      == trace(TextOps.bpeMerges(Seq("a b a").toDF("text"), "text", 2)))
-    // U+0001-carrying tokens are excluded identically
+    // the expected traces were produced by a per-step Spark trainer (one
+    // pair-explode job per merge), independent of this driver-side code;
+    // the pairless corpus is the hand-computed test's exhaustion case
+    val df = Seq("low low low", "lower lowest", "aaaa aa banana",
+      "the theme theater", "zz zz zz z").toDF("text")
+    val mixed = trace(TextOps.bpeMerges(df, "text", steps = 8))
+    assert(mixed == Seq((1, "l", "o", 5L), (2, "lo", "w", 5L), (3, "a", "a", 4L),
+      (4, "h", "e", 3L), (5, "t", "he", 3L), (6, "z", "z", 3L), (7, "a", "n", 2L),
+      (8, "e", "r", 2L)), mixed)
+    // tokens carrying the U+0001 separator are excluded from training
     val dirty = Seq("low low", "ba\u0001d ba\u0001d ba\u0001d").toDF("text")
-    assert(trace(TextOps.bpeMergesLocal(dirty, "text", 3))
-      == trace(TextOps.bpeMerges(dirty, "text", 3)))
+    assert(trace(TextOps.bpeMerges(dirty, "text", 3)) ==
+      Seq((1, "l", "o", 2L), (2, "lo", "w", 2L)))
   }
 
   test("BPE apply: symbol counts under an ordered merge list, merges " +
@@ -1588,7 +1580,7 @@ class OpsSpec extends AnyFunSuite {
     assert((100L until 140L).forall(comp(_) == 100L))
   }
 
-  test("bpeMergesLocal minCount floor and maxVocab heavy-hitters cut " +
+  test("bpeMerges minCount floor and maxVocab heavy-hitters cut " +
     "bound the driver collect; trace unchanged when the dropped tail " +
     "carries no winning support") {
     def trace(got: org.apache.spark.sql.DataFrame) =
@@ -1597,15 +1589,15 @@ class OpsSpec extends AnyFunSuite {
     // 10× "low", 3× "lower", plus singleton junk tokens (URL-fragment tail)
     val df = (Seq.fill(10)("low") ++ Seq.fill(3)("lower") ++
       Seq("qz0x", "vv9k", "m3uu")).map(Tuple1(_)).toDF("text")
-    val full = trace(TextOps.bpeMergesLocal(df, "text", steps = 4))
-    val floored = trace(TextOps.bpeMergesLocal(df, "text", steps = 4,
+    val full = trace(TextOps.bpeMerges(df, "text", steps = 4))
+    val floored = trace(TextOps.bpeMerges(df, "text", steps = 4,
       minCount = 2L))
     // the junk singletons never carry a winning pair on this corpus, so
     // the floored trace is identical above the floor
     assert(floored == full, s"\nfull: $full\nfloored: $floored")
     // top-1 heavy-hitters cut: only "low" (cnt 10) survives the collect —
     // its exact trace is (l,o)@10 then (lo,w)@10, then exhaustion
-    val top1 = trace(TextOps.bpeMergesLocal(df, "text", steps = 4,
+    val top1 = trace(TextOps.bpeMerges(df, "text", steps = 4,
       maxVocab = 1))
     assert(top1 == Seq((1, "l", "o", 10L), (2, "lo", "w", 10L)), top1)
   }

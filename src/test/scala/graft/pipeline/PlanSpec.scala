@@ -659,7 +659,6 @@ class PlanSpec extends AnyFunSuite {
     ("graft/ops/Similarity.scala", "trainQuantizer") -> 1,
     ("graft/ops/Similarity.scala", "cosineNearDups") -> 1,
     ("graft/ops/Similarity.scala", "semDedup") -> 1,
-    ("graft/ops/TextOps.scala", "bpeMerges") -> 2,
     ("graft/ops/TextOps.scala", "trainQualityWeights") -> 1,
     ("graft/ops/TextOps.scala", "dsirBucketWeights") -> 1,
     ("graft/ops/TextOps.scala", "bigramLmScores") -> 1,
