@@ -8,9 +8,14 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query names (dev-only focused
-    // runs; the driver always passes exactly two args → full suite)
+    // runs; the driver always passes exactly two args → full suite). A
+    // focused run's oracle_sql.json holds only the queries it ran.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    only.foreach { o =>
+      val unknown = o -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"not SparkEntry queries: ${unknown.toSeq.sorted.mkString(",")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -41,7 +46,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = only.fold(SparkEntry.oracleSql)(o => SparkEntry.oracleSql.filter(kv => o(kv._1)))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

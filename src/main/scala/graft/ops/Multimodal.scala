@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.kernel.Hashing
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
@@ -74,14 +74,6 @@ object Multimodal {
       .toDF()
   }
 
-  /** Frame sampling plan for video rows: every `stride`-th frame index —
-    * pure column math over decoded metadata (no decode round-trip). */
-  def frameSamplePlan(decoded: DataFrame, stride: Int): DataFrame =
-    decoded.filter(col("kind") === "video" && col("frames") > 0)
-      .select(col("id"), col("frames"),
-        sequence(lit(0), col("frames") - 1, lit(stride)).as("sampled_frames"))
-      .withColumn("sample_count", size(col("sampled_frames")))
-
   /** Append a `sample_count` column: frames sampled at every `stride`-th
     * index (0 when the row has no frames). */
   def withFrameSampleCount(decoded: DataFrame, stride: Int): DataFrame =
@@ -99,25 +91,5 @@ object Multimodal {
     decoded
       .withColumn("target_width", ceil(col("width") * scale).cast("int"))
       .withColumn("target_height", ceil(col("height") * scale).cast("int"))
-  }
-
-  /** Resize plan: target boxes preserving aspect ratio. */
-  def resizePlan(decoded: DataFrame, maxSide: Int): DataFrame =
-    withResizeTargets(decoded, maxSide)
-      .select(col("id"), col("width"), col("height"),
-        col("target_width"), col("target_height"))
-
-  /** Deterministic synthetic media table (for tests/benches): binary
-    * payloads derived from ids. */
-  def synthMedia(spark: org.apache.spark.sql.SparkSession, n: Long): Dataset[MediaRow] = {
-    import spark.implicits._
-    spark.range(n).map { i =>
-      val kind = (i % 3) match {
-        case 0 => "image"; case 1 => "audio"; case _ => "video"
-      }
-      val len = 32 + (Hashing.mix(i) & 0x3FF).toInt
-      val bytes = Array.tabulate(len)(j => (Hashing.mix(i * 1000003L + j) & 0xFF).toByte)
-      MediaRow(i, kind, bytes)
-    }
   }
 }

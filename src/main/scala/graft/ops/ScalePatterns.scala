@@ -1,33 +1,13 @@
 package graft.ops
 
 import graft.expr.KernelExpressions
-import graft.pipeline.LocalFs
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale patterns the 100 TB deployment leans on, packaged as reusable
-  * operators: bucketed co-located joins (no shuffle at join time) and
-  * two-phase salted aggregation for skewed keys. */
+  * operators: deterministic sampling, two-phase salted aggregation for
+  * skewed keys, skew-proof top-k and exact quantile labels. */
 object ScalePatterns {
-
-  /** Persist a DataFrame as a bucketed+sorted table: joins/aggregations on
-    * `keyCol` between tables bucketed the same way need NO shuffle — the
-    * bucketing is the shuffle, paid once at write time. This is the
-    * catalog-table analog of the pipeline's pmod-bucketed directory layout.
-    */
-  def writeBucketed(df: DataFrame, table: String, keyCol: String, buckets: Int): Unit =
-    df.write.options(LocalFs.writeOptions)
-      .mode("overwrite")
-      .bucketBy(buckets, keyCol)
-      .sortBy(keyCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Join two same-bucketed tables on their bucket key — plan contains no
-    * Exchange on either side (asserted in ScalePatternsSpec). */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String,
-      keyCol: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), Seq(keyCol))
 
   /** Deterministic stratified sampling for training-data mixing: keep a
     * row iff `pmod(mix64(id), 1000) < quotaPerMille(stratum)` — e.g.

@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions.{count, lit}
 
 /** Query profiler for SparkEntry queries. Times each named query `reps`
   * times, round-robin (so a host-capacity drift hits every query equally
-  * rather than whichever ran last — the BENCH.md §0 discipline), after a
-  * q35 warm-up, through a `noop` write of every row: `.count()` would let
-  * column pruning pass through a removed checkpoint and under-report what
-  * the output costs. `rows=` is an `Observation` count on the written
+  * rather than whichever ran last — the BENCH.md §0 discipline), after one
+  * untimed pass over the same queries (so rep 1 is not a cold JVM), through
+  * a `noop` write of every row: `.count()` would let column pruning pass
+  * through a removed checkpoint and under-report what the output costs. `rows=` is an `Observation` count on the written
   * frame. After every query it prints one line per Spark job in
   * submission order: wall clock, stages, tasks, summed executor task time
   * and the graft call sites of each stage — where a multi-job query
@@ -91,17 +91,20 @@ object QueryProfile {
       }
     })
 
-    SparkEntry.queries("q35_lineitem_pricing")(spark, sfDir).count() // warmup
+    def noopWrite(n: String): Any = {
+      val obs = Observation()
+      SparkEntry.queries(n)(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
+        .write.options(LocalFs.writeOptions).format("noop").mode("overwrite").save()
+      obs.get("rows")
+    }
+    names.foreach(noopWrite) // warm-up, untimed
 
     for (r <- 1 to reps; n <- names) {
       ListenerBusDrain(spark.sparkContext)
       Seq(jobStart, jobWall, jobStages, jobTaskSecs, jobTasks, jobSite, stageToJob)
         .foreach(_.clear())
       val t0 = System.nanoTime()
-      val obs = Observation()
-      SparkEntry.queries(n)(spark, sfDir).observe(obs, count(lit(1)).as("rows"))
-        .write.options(LocalFs.writeOptions).format("noop").mode("overwrite").save()
-      val cnt = obs.get("rows")
+      val cnt = noopWrite(n)
       val secs = (System.nanoTime() - t0) / 1e9
       ListenerBusDrain(spark.sparkContext)
       println(f"[qprofile] rep=$r $n%-28s $secs%8.3f s rows=$cnt")

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Byte-identity gate for extracted text + spans per url (north rule):
   * each committed fixture html must extract to EXACTLY the committed golden
   * bytes. Regenerate deliberately with
-  * `sbt "runMain graft.tools.GenHtmlGoldens"` when extraction behavior is
+  * `sbt "Test/runMain graft.tools.GenHtmlGoldens"` when extraction behavior is
   * intentionally changed. */
 class HtmlGoldenSpec extends AnyFunSuite {
 

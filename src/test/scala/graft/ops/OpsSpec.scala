@@ -893,8 +893,19 @@ class OpsSpec extends AnyFunSuite {
     assert(vals(1L) == vals(4L)) // identical text → identical fingerprint
   }
 
+  /** Deterministic synthetic media table: binary payloads derived from ids. */
+  private def synthMedia(n: Long) =
+    spark.range(n).map { i =>
+      val kind = (i % 3) match {
+        case 0 => "image"; case 1 => "audio"; case _ => "video"
+      }
+      val len = 32 + (Hashing.mix(i) & 0x3FF).toInt
+      val bytes = Array.tabulate(len)(j => (Hashing.mix(i * 1000003L + j) & 0xFF).toByte)
+      Multimodal.MediaRow(i, kind, bytes)
+    }.toDF()
+
   test("multimodal: stub decode schema, frame sampling, resize plans") {
-    val media = Multimodal.synthMedia(spark, 30L).toDF()
+    val media = synthMedia(30L)
     val decoded = Multimodal.decode(media)
     assert(decoded.count() == 30)
     assert(decoded.columns.toSet ==
@@ -907,9 +918,10 @@ class OpsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getInt(3), r.getInt(4))).toSet
     assert(again == d.map(r => (r.getLong(0), r.getInt(3), r.getInt(4))).toSet)
 
-    val frames = Multimodal.frameSamplePlan(decoded, stride = 30)
+    val frames = Multimodal.withFrameSampleCount(
+      decoded.filter(col("kind") === "video"), stride = 30)
     assert(frames.filter(col("sample_count") < 1).count() == 0)
-    val resize = Multimodal.resizePlan(decoded, maxSide = 256).collect()
+    val resize = Multimodal.withResizeTargets(decoded, maxSide = 256).collect()
     assert(resize.forall(r => r.getAs[Int]("target_width") <= 256 &&
       r.getAs[Int]("target_height") <= 256))
   }

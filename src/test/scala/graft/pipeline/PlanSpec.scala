@@ -680,6 +680,33 @@ class PlanSpec extends AnyFunSuite {
     assert(unlisted.isEmpty, unlisted)
   }
 
+  /** The only entry points in src/main/scala, by file: each is run by a
+    * deployment, the correctness dump or a benchmark. Test-golden
+    * generators live in src/test. */
+  private val mainAllowlist: Map[String, Int] = Map(
+    "graft/Main.scala" -> 1,
+    "graft/Verify.scala" -> 1,
+    "graft/Bench.scala" -> 1,
+    "graft/tools/QueryProfile.scala" -> 1,
+    "graft/tools/ClusterScalingBench.scala" -> 1,
+    "graft/tools/KernelProfile.scala" -> 1)
+
+  /** The only SparkSession builders in src/main/scala, by file: every
+    * other main runs without Spark. */
+  private val sessionAllowlist: Map[String, Int] = mainAllowlist - "graft/tools/KernelProfile.scala"
+
+  test("mains and SparkSession builders in src/main/scala only in the " +
+    "allowlisted files") {
+    def byFile(found: Seq[(String, String, Int)]): Map[String, Int] =
+      found.groupBy(_._1).map { case (f, v) => f -> v.size }
+    def calls(re: scala.util.matching.Regex)(code: String): Seq[Int] =
+      re.findAllMatchIn(code).map(_.start).toSeq
+    val mains = sourceCalls(calls("""(?<![\w$])(def main|extends App)(?![\w$])""".r))
+    assert(byFile(mains) == mainAllowlist, report(mains))
+    val builders = sourceCalls(calls("""SparkSession\s*\.\s*builder(?![\w$])""".r))
+    assert(byFile(builders) == sessionAllowlist, report(builders))
+  }
+
   test("every .write/.writeStream in src/main/scala passes LocalFs.writeOptions " +
     "first: no chmod process per created file or directory") {
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -693,7 +720,7 @@ class PlanSpec extends AnyFunSuite {
       m <- write.findAllMatchIn(code)
     } yield (s"${root.relativize(f)}:${code.substring(0, m.start).count(_ == '\n') + 1}",
       code.substring(m.end).dropWhile(_.isWhitespace).startsWith(".options(LocalFs.writeOptions)"))
-    assert(sites.size >= 10, sites)
+    assert(sites.size == 9, sites)
     assert(sites.forall(_._2), sites.filterNot(_._2).map(_._1).mkString("\n"))
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Writes EXPLAIN.md: the formatted physical plans of the hot paths, as a
-  * reviewable artifact (`sbt "runMain graft.tools.GenExplain"`). */
+  * reviewable artifact (`sbt "Test/runMain graft.tools.GenExplain"`). */
 object GenExplain {
 
   /** Formatted plans of everything `build` runs: one (action, plan) per

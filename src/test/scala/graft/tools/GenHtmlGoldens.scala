@@ -8,7 +8,7 @@ import graft.kernel.{Html, Synth}
 
 /** Generates the frozen HTML-extraction goldens under
   * src/test/resources/golden/html/ (FIXTURES.md §2). Run ONCE per intended
-  * behavior change via `sbt "runMain graft.tools.GenHtmlGoldens"`, then
+  * behavior change via `sbt "Test/runMain graft.tools.GenHtmlGoldens"`, then
   * commit: HtmlGoldenSpec compares byte-for-byte against these files, which
   * is the byte-identity gate for extracted text per url.
   *
